@@ -52,14 +52,8 @@ object Bench {
     val missing = Headline.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"Headline names not in SparkEntry.queries: $missing")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.core.Session.local(cpus)
     // untimed warmup: touch every fixture table once so the first timed
     // query doesn't absorb session/codegen/footer-cache startup cost
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -95,7 +89,7 @@ object Bench {
     // sweep loudly, not leave it running in an undefined JVM.
     def calibCompute(): Double =
       try timed {
-        spark.range(0L, 256L * 1000 * 1000, 1L, cpus.toInt)
+        spark.range(0L, 256L * 1000 * 1000, 1L, cpus)
           .select(bit_xor(xxhash64(col("id")))).collect(); ()
       } catch { case scala.util.control.NonFatal(_) => 0.0 }
     def calibScan(): Double =
@@ -172,7 +166,7 @@ object Bench {
     // the growth queries time their internal phases through
     // graft.core.Phase; the drains land as `_phase_<query>|<phase>`
     // control rows in the TSV, so THIS environment's phase split rides
-    // every published bench — no separate GrowthProf run to argue from
+    // every published bench — no separate dev-box profile to argue from
     graft.core.Phase.enable()
     val phaseRows = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     val perRep = (1 to reps).map { _ =>

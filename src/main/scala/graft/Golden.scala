@@ -37,12 +37,7 @@ object Golden {
     Tracked.map(q => q -> checksum(SparkEntry.queries(q)(spark, sfDir))).toMap
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(4)
     val entries = compute(spark, "/root/testdata/sf0.001").toSeq.sortBy(_._1)
       .map { case (q, (n, c)) => s"""  "$q": {"rows": $n, "md5": "$c"}""" }
     Files.writeString(Paths.get(GoldenPath),

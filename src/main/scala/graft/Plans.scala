@@ -1,11 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-
-/** Dumps `explain("formatted")` for the headline queries to PLANS.md —
-  * the reviewable evidence that filters push down, dims broadcast,
-  * aggregation is partial→final, and top-k avoids global sorts. */
+/** Prints `explain("formatted")` as markdown for the named queries
+  * (default: the headline set) — the reviewable evidence that filters
+  * push down, dims broadcast, aggregation is partial→final, and top-k
+  * avoids global sorts. `tools/run.sh graft.Plans > PLANS.md`
+  * regenerates the committed file; `graft.Plans q1 q2` prints just
+  * those. */
 object Plans {
   val Headline = Seq(
     "tsdb_query_pipeline", "tsdb_downsample_twa", "scan_pruned",
@@ -79,24 +79,19 @@ object Plans {
     "tsdb_downsample_fill_nan_text")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = if (args.nonEmpty) args.toSeq else Headline
+    val spark = graft.core.Session.local(4)
     val sf = "/root/testdata/sf0.001"
     val out = new StringBuilder
     out ++= "# Physical plans (sf0.001, `explain formatted`)\n\n"
-    out ++= "Regenerate with `tools/run.sh graft.Plans`.\n"
-    Headline.foreach { q =>
+    out ++= "Regenerate with `tools/run.sh graft.Plans > PLANS.md`.\n"
+    names.foreach { q =>
       val df = SparkEntry.queries(q)(spark, sf)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       out ++= s"\n## $q\n\n```\n$plan```\n"
     }
-    Files.writeString(Paths.get("PLANS.md"), out.toString)
-    println("wrote PLANS.md")
+    print(out)
     spark.stop()
   }
 }

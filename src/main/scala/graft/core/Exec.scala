@@ -3,9 +3,9 @@ package graft.core
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
-/** Shared execution helpers for the driver-facing mains (Bench, Verify,
-  * Prof, ScaleProbe) plus the ONE materialization primitive every eager
-  * mid-plan cut in the main tree goes through. */
+/** Shared execution helpers for the driver-facing mains (Bench, Verify)
+  * plus the ONE materialization primitive every eager mid-plan cut in
+  * the main tree goes through. */
 object Exec {
 
   /** Reliable-materialization switch: `SPARK_GRAFT_RELIABLE=1` (env) or

@@ -3,7 +3,7 @@ package graft.core
 /** Lightweight phase recorder for lifecycle-priced bench rows
   * (VERDICT r16 #1b: the driver's `stream_text_index_growth` read 52.3 s
   * against a ~7 s honest solo profile, and the attribution argument
-  * needed a DRIVER-ENVIRONMENT phase split — a dev-box GrowthProf run
+  * needed a DRIVER-ENVIRONMENT phase split — a dev-box profiling run
   * cannot speak for the driver's container). Growth queries wrap their
   * internal phases in [[time]]; Bench enables recording, drains after
   * each query, and writes `_phase_<query>|<phase>` control rows into

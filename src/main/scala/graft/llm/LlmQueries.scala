@@ -82,9 +82,10 @@ object LlmQueries {
     * (250), floor 8 — per-query probe work (nprobe·corpus/k candidates)
     * and per-cluster pair blocks (Σ cluster²) stay CONSTANT as the
     * corpus grows. This is the REGISTERED sizing for the kNN-join /
-    * cosine-dedup pair (r14; previously only ScaleProbe measured it —
+    * cosine-dedup pair (r14; previously only a dev probe measured it —
     * the registered rows probed the fixture's k=8 lists, the one
-    * super-linear family in the r13 10× sweep). The corpus count comes
+    * super-linear family in the r13 10× sweep, PERF.md "Full-family
+    * 10× sweep (r13)"). The corpus count comes
     * free off the memoized [[contentTag]] (its `n=` field), so sizing
     * adds zero extra scans. The oracle restates the SAME formula in SQL
     * (`GREATEST(8, COUNT(*) // 250)` as the Lloyd seed LIMIT), so the
@@ -981,9 +982,9 @@ object LlmQueries {
       // r10 form self-joined exploded elements (82M joined rows,
       // 13 s); r11 generated the upper triangle map-side and
       // partial-agg'd decimal sums (4.16M generated rows at sf0.1) —
-      // but PcaProf r18 measured that aggregate at 6.3–9.4 s of the
-      // row's ~8 s: every term pays Cast(double AS DECIMAL(18,4)),
-      // which routes through Double.toString + BigDecimal (~1.5 µs/
+      // but r18 measured that aggregate at 6.3–9.4 s of the
+      // row's ~8 s (OPTIMIZATION_r18.md, llm_embed_pca): every term
+      // pays Cast(double AS DECIMAL(18,4)), which routes through Double.toString + BigDecimal (~1.5 µs/
       // row), and 4.16M generator rows materialize just to be summed.
       // The fold replaces both: each input partition accumulates the
       // upper-triangle gram into a local LongMap of EXACT 4dp-scaled
@@ -1371,8 +1372,9 @@ object LlmQueries {
     // of llm_knn_join — no within-label self-join anywhere (PlanSpec
     // asserts it); every vector probes its nprobe lists, candidates
     // bounded by nprobe·(corpus/k) per query, and k IS the registered
-    // scale knob (r14: scaledAnnK = max(8, n/250), the sizing ScaleProbe
-    // measured at 2.8×/10× vs 10.7× with fixture k). Oracle = the
+    // scale knob (r14: scaledAnnK = max(8, n/250), the sizing measured
+    // at 2.8×/10× vs 10.7× with fixture k — PERF.md "Full-family 10×
+    // sweep (r13)"). Oracle = the
     // Lloyd-unrolled batch probe with the SAME SQL-computed seed count
     // and the self candidate removed before the rank window.
     "llm_knn_join_ivf" -> ((s, dir) => {

@@ -291,9 +291,9 @@ object Similarity {
     * map-side broadcast-NLJ pass, still zero shuffle of the vectors;
     * the per-row cost is identical, only the code shape changes). The
     * same swap applies to [[readPqCodebooks]]' ADC scoring (codebooks
-    * → broadcast relation keyed by (sub, code)). Measured at k=256 in
-    * ScaleProbe (`centroid_assign_*_k256`): literal falls out of
-    * whole-stage codegen (Janino 64 KB) at 3.60 s; broadcast+min_by
+    * → broadcast relation keyed by (sub, code)). Measured at k=256
+    * (PERF.md r11, "Chained-CASE ceiling MEASURED at k=256"): literal
+    * falls out of whole-stage codegen (Janino 64 KB) at 3.60 s; broadcast+min_by
     * stays codegen'd at 1.18 s. As of r12 the swap is MECHANIZED:
     * [[assignNearest]] auto-selects the broadcast form at
     * k ≥ [[LiteralKCeiling]] — callers never see the difference. */
@@ -331,7 +331,7 @@ object Similarity {
     * cliff where the literal expression tree blows Janino's 64 KB
     * method-bytecode limit, drops out of whole-stage codegen, and runs
     * interpreted at ~3× the broadcast form's cost (PERF.md r11,
-    * ScaleProbe `centroid_assign_*_k256`: 3.60 s vs 1.18 s at 1×). */
+    * "Chained-CASE ceiling MEASURED at k=256": 3.60 s vs 1.18 s at 1×). */
   val LiteralKCeiling = 128
 
   /** k at or above which BUILD-path assignments (the Lloyd loop and the
@@ -339,7 +339,7 @@ object Similarity {
     * literal expression tree even though it EXECUTES fastest: every
     * Lloyd iteration generates a FRESH plan, and a k×dim literal tree
     * costs ~10 s of Janino compilation per iteration at k=80/dim=64
-    * (measured, LloydProf at the 10× replica: the mean-agg stage read
+    * (measured at the 10× replica, PERF.md r16 §4b: the mean-agg stage read
     * 14.5 s with literal centroids embedded vs <1 s broadcast
     * execution) — compile-per-iteration dominates run-once plans.
     * Serving/probe paths keep the literal route up to
@@ -1055,8 +1055,8 @@ object Similarity {
     * ([[knnJoinPerGroup]]'s Σ label² blowup) with per-query candidate
     * sets bounded by nprobe·(corpus/k) — and k (the cluster count) is
     * the scale knob: sizing k ∝ corpus/target-list-size keeps the
-    * per-query candidate fetch CONSTANT as the corpus grows (ScaleProbe
-    * measures exactly that sizing at 10×). Emits
+    * per-query candidate fetch CONSTANT as the corpus grows (PERF.md
+    * "Full-family 10× sweep (r13)": that sizing reads 2.8× at 10×). Emits
     * (query_id, rn, neighbor_id, sim). */
   def ivfKnnJoinStored(s: SparkSession, path: String, k: Int, nprobe: Int,
                        maxBroadcastQueries: Long = 50000L): DataFrame = {
@@ -1169,7 +1169,7 @@ object Similarity {
   }
 
   /** Default retrain trigger: 30% untrained mass. The measured curve
-    * (graft.tools.DriftCurve, PERF.md r8: recall@5 vs a fresh rebuild
+    * (PERF.md r8, "ANN drift is now measured": recall@5 vs a fresh rebuild
     * 0.84 → 0.75 → 0.69 at 0.05 / 0.25 / 1.0 appended mass) shows
     * gradual decay, not a cliff — the stored centroids increasingly
     * mis-route new-regime vectors and nprobe would have to grow to
@@ -1229,8 +1229,8 @@ object Similarity {
     * size, averaged. Driver-side over two collected top-k frames —
     * O(queries × k), probe-sized by construction. The SINGLE
     * definition of the drift-recall experiment, shared by the LlmSpec
-    * regression floor and the graft.tools.DriftCurve measurement so
-    * the two can never silently diverge. */
+    * regression floor and the curve in PERF.md r8 ("ANN drift is now
+    * measured") so the two can never silently diverge. */
   def storedProbeRecall(s: SparkSession, queries: DataFrame,
                         referencePath: String, candidatePath: String,
                         k: Int, nprobe: Int): Double = {

@@ -382,29 +382,6 @@ object Graph {
     s.conf.getOption(WedgeSliceBudgetKey).map(_.toLong)
       .getOrElse(8L * 1024 * 1024 * 1024)
 
-  /** Conf key for how many wedge slices run CONCURRENTLY (VERDICT r16
-    * #6): strictly sequential slices leave the box idle between a
-    * slice's shuffle-write and shuffle-read phases; 2 in flight overlap
-    * one slice's reduce with the next one's map. Peak live scratch is
-    * `concurrency × wedgeSliceBytes` AND — the part that bit — peak
-    * HEAP is concurrency × the slices' shuffle-hash build sides, which
-    * do not spill. DEFAULT 1 (sequential, the r16-proven discipline):
-    * concurrency 2 was MEASURED at the 100× replica on this box
-    * (96 GB driver heap) and sent the single-JVM run into a GC death
-    * spiral where sequential completes in 1128.8 s — on local[32] the
-    * executors share the one heap, so overlapping slices doubles
-    * non-spillable build memory with no second machine to absorb it
-    * (PERF.md r17). On a REAL cluster the build sides land on separate
-    * executors and the knob is plausible — it ships opt-in for that
-    * topology, never the single-box default. Results are identical
-    * either way: every slice materializes its own top-20 before the
-    * union and the final order is total (BehaviorSpec pins the forced
-    * conc=2 tiny-budget split ≡ single-pass at fixture scale). */
-  private[graft] val WedgeSliceConcurrencyKey = "graft.graph.wedgeSliceConcurrency"
-  private def wedgeSliceConcurrency(s: SparkSession): Int =
-    math.max(1, s.conf.getOption(WedgeSliceConcurrencyKey)
-      .map(_.toInt).getOrElse(1))
-
   /** The beyond-broadcast-budget Adamic–Adar (judge r14 #1; refold
     * chain cut per judge r15 #2). Same math and oracle text as the
     * broadcast regime; structural changes:
@@ -507,50 +484,15 @@ object Graph {
     else {
       // adjacency pinned once (dirEdges × 8 B) so B slices don't
       // recompute the pack+groupBy; each finished slice leaves only
-      // its 20-row result behind
+      // its 20-row result behind. Slices run one at a time: two in
+      // flight double the non-spillable shuffle-hash build sides in the
+      // one shared heap (PERF.md r17 §2, a GC death spiral at 100×)
       val adjM = materialize(adj)
-      val conc = wedgeSliceConcurrency(s)
-      val firsts: Seq[DataFrame] =
-        if (conc == 1)
-          (0 until nBuckets - 1).map { b =>
-            val t = materialize(slice(adjM, b))
-            System.gc() // reclaim the finished slice's shuffle files
-            t
-          }
-        else {
-          // bounded-pool overlap (VERDICT r16 #6): at most `conc`
-          // slices in flight — peak live scratch conc × budget, each
-          // slice still fully materialized (20 rows) before the union,
-          // so the result is bit-identical to the sequential path
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(conc)
-          // ADVICE r17: a failed slice must not leave queued/in-flight
-          // slices consuming the shared single-JVM heap — cancel the
-          // outstanding futures, shutdownNow the pool, and await the
-          // interrupted workers before rethrowing, so a failed
-          // overlapped run releases its slices' jobs and shuffle
-          // scratch promptly (precisely the overload scenario the knob
-          // doc warns about).
-          val futs = (0 until nBuckets - 1).map { b =>
-            pool.submit(new java.util.concurrent.Callable[DataFrame] {
-              def call(): DataFrame = {
-                val t = materialize(slice(adjM, b))
-                System.gc() // reclaim the finished slice's shuffle files
-                t
-              }
-            })
-          }
-          try {
-            val rs = futs.map(_.get())
-            pool.shutdown()
-            rs
-          } catch {
-            case e: Throwable =>
-              futs.foreach(_.cancel(true))
-              pool.shutdownNow()
-              pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-              throw e
-          }
-        }
+      val firsts = (0 until nBuckets - 1).map { b =>
+        val t = materialize(slice(adjM, b))
+        System.gc() // reclaim the finished slice's shuffle files
+        t
+      }
       (firsts :+ slice(adjM, nBuckets - 1)).reduce(_ unionAll _)
         .orderBy(col("adamic_adar").desc, col("src"), col("dst"))
         .limit(20)
@@ -682,8 +624,9 @@ object Graph {
     // r14: survivor-set movement is MEASURED dispatch like pagerank —
     // nodes × 32 B within budget broadcasts the keep set into both
     // semi joins; past it, edges repartition once on src and the semi
-    // joins run shuffle-hash (the form ScaleProbe measured at 10×:
-    // broadcast 5.9×, copart flat-er). PlanSpec pins both regimes.
+    // joins run shuffle-hash (the form measured at 10× in PERF.md r12,
+    // "Graph trio at 10×": broadcast 5.4–5.9×, copart 2.6–3.8×).
+    // PlanSpec pins both regimes.
     "graph_kcore" -> ((s, dir) => {
       // ADVICE r14: the broadcast estimate comes off the ROUND-1 degree
       // aggregate the peel consumes anyway (deg0.count() = distinct src
@@ -865,7 +808,7 @@ object Graph {
     // capped subgraph through the SAME measured dispatch as the uncapped
     // row. This is the celebrity-skew armor: after the cap every
     // adjacency row is ≤ cap × 8 B by construction, so neither regime
-    // can be broken by one hub node (SkewProbe carries the measured
+    // can be broken by one hub node (PERF.md r17 §1 carries the measured
     // receipt: an injected 10×-fixture hub whose uncapped attach
     // payload estimate is ~deg(hub)² × 8 B). Cap semantics are
     // EXCLUSION, not truncation — a truncated adjacency would make the

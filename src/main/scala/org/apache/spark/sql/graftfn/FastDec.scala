@@ -15,7 +15,8 @@ import org.apache.spark.sql.types._
   * representation: `Decimal(d)` = `BigDecimal(Double.toString(d))`, then
   * `changePrecision(p, s, HALF_UP)` — a per-row string render + parse
   * (~0.5 µs) that dominated every decimal-sum aggregation over raw
-  * points (PcaProf r18: 6.3 s of an 8 s row was this cast).
+  * points (OPTIMIZATION_r18.md, llm_embed_pca: 6.3 s of an 8 s row was
+  * this cast).
   *
   * Fast path: `u = rint(x·10^s)` as a long, valid iff the scaled value
   * is (a) finite, (b) small enough that the long is exact and one
@@ -25,9 +26,9 @@ import org.apache.spark.sql.types._
   * disagree (the D.r4s divergence class), so those rows take the slow
   * path. The slow path IS the reference: `Decimal(d)` +
   * `changePrecision` — bit-identical to Cast by construction, including
-  * NaN/±Inf → NULL and the ANSI overflow error (probed in
-  * tools/DecProbe; ANSI is Spark 4's default and the engine sessions
-  * run with it). Off the boundary every half rounding rule agrees, so
+  * NaN/±Inf → NULL and the ANSI overflow error (OPTIMIZATION_r18.md,
+  * "D.dec / D.dec10 → graftfn.FastDec"; FastDecSpec pins the error;
+  * ANSI is Spark 4's default and the engine sessions run with it). Off the boundary every half rounding rule agrees, so
   * rint inside the guard equals HALF_UP exactly.
   *
   * DSpec sweeps randomized + adversarial values against the real Cast

@@ -10,11 +10,9 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    val s = graft.core.Session.local(4)
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s
+  }
 }
