@@ -9,8 +9,10 @@ import org.apache.spark.sql.DataFrame
 object Exec {
 
   /** Reliable-materialization switch: `SPARK_GRAFT_RELIABLE=1` (env) or
-    * `-Dgraft.reliable=1` (tests toggle the prop per-suite; env vars
-    * can't be set per-JVM under a forked sbt test run). */
+    * `-Dgraft.reliable=1` (the prop exists because env vars can't be set
+    * per-JVM under a forked sbt test run). No test sets either today, so
+    * the reliable arm is unexercised by the suite; ROADMAP item 4's
+    * force-scale sweep is where it gets checked. */
   private def reliableMode: Boolean =
     sys.props.get("graft.reliable").orElse(sys.env.get("SPARK_GRAFT_RELIABLE"))
       .contains("1")

@@ -425,21 +425,6 @@ object Dedup {
     * schema changes. */
   val BandLayoutVersion = "bands-v2"
 
-  private def bandMetaPath(path: String) = new org.apache.hadoop.fs.Path(s"$path/_meta")
-
-  /** True iff a committed band index at `path` carries `fingerprint`. */
-  def bandIndexCurrent(s: org.apache.spark.sql.SparkSession, path: String,
-                       fingerprint: String): Boolean = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val mp = bandMetaPath(path)
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(mp) && {
-      val in = fs.open(mp)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) == fingerprint
-      finally in.close()
-    }
-  }
-
   /** Build (and atomically swap in) the corpus band index at `path`. */
   def buildBandIndex(s: org.apache.spark.sql.SparkSession, corpus: DataFrame,
                      idCol: String, textCol: String, path: String,
@@ -448,10 +433,7 @@ object Dedup {
     graft.tsdb.Keysets.swapBuiltDir(s, path) { tmp =>
       bandSigsPortable(corpus, idCol, textCol, k, r, shingleN)
         .write.parquet(s"$tmp/bands")
-      val fs = bandMetaPath(tmp).getFileSystem(s.sparkContext.hadoopConfiguration)
-      val out = fs.create(bandMetaPath(tmp), true)
-      try out.write(fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      graft.tsdb.Keysets.writeMarker(s, s"$tmp/_meta", fingerprint)
     }
 
   /** The stored band index = base table ∪ committed deltas (the Keysets

@@ -40,12 +40,12 @@ object LlmQueries {
     * both exercised. Interpolated into the oracle SQL from here. */
   private val PhraseTerms = Seq("key", "agg")
 
-  /** Stable per-fixture location for the persisted ANN index (stored
-    * OUTSIDE the fixture dir — /root/testdata is read-only). One path
+  /** Stable per-fixture location of the persisted artifact `name`
+    * (stored OUTSIDE the fixture dir, which may be read-only). One dir
     * per sfDir: sf0.01 and sf0.1 runs never clobber each other. */
-  private[graft] def annIndexPath(dir: String): String =
+  private[graft] def artifactPath(dir: String, name: String): String =
     java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "ann").toString
+      dir.replaceAll("[^A-Za-z0-9._-]", "_"), name).toString
 
   /** Order-independent content tag of a fixture frame: ONE agg pass
     * returning BOTH the row count and the bit_xor of per-row xxhash64
@@ -118,14 +118,6 @@ object LlmQueries {
     Similarity.IndexParams(k = scaledAnnK(s, dir),
       trainStride = scaledAnnStride(s, dir))
 
-  /** Separate artifact for the scaled-k index: the main [[annIndexPath]]
-    * index stays k=8 (the llm_sim_ivf family's oracle unrolls that
-    * Lloyd), so sharing one path would thrash rebuilds whenever
-    * scaledAnnK ≠ 8. One per fixture dir, same tmp-root contract. */
-  private[graft] def annScaledIndexPath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "ann_scaled").toString
-
   private[graft] def annScaledFingerprint(s: org.apache.spark.sql.SparkSession,
                                           dir: String): String =
     scaledAnnParams(s, dir).fingerprint(dir) +
@@ -148,120 +140,37 @@ object LlmQueries {
     lines.join(ldf, "h").select("doc_id", "line_idx", "line", "df")
   }
 
-  /** Persisted inverted-text-index artifact (one per fixture dir, same
-    * tmp-root contract as [[annIndexPath]]); fingerprint pins the
-    * documents content so a fixture regeneration rebuilds. */
-  private def textIndexPath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "text").toString
-
+  /** The `text` index fingerprint pins the documents content so a
+    * fixture regeneration rebuilds. */
   private def textFingerprint(s: org.apache.spark.sql.SparkSession,
                               dir: String): String =
     s"${Retrieval.TextLayoutVersion}|b=16|${contentTag(Tables.documents(s, dir), s"docs|$dir")}"
 
-  /** Separate text-index artifact for the build-then-append lifecycle
-    * query (the main [[textIndexPath]] index must stay whole-corpus for
-    * the stored ≡ inline oracle). */
-  private def textAppendPath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "text_app").toString
   private def textAppendFingerprint(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
     s"${Retrieval.TextLayoutVersion}|app|b=16|built=mod10ne7|appended=mod10eq7" +
       s"|${contentTag(Tables.documents(s, dir), s"docs|$dir")}"
 
-  /** Separate text-index artifact for the takedown lifecycle query —
-    * built whole-corpus, then a slice tombstoned. */
-  private def textDeletePath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "text_del").toString
   private def textDeleteFingerprint(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
     s"${Retrieval.TextLayoutVersion}|del|b=16|deleted=mod11eq5" +
       s"|${contentTag(Tables.documents(s, dir), s"docs|$dir")}"
 
-  /** Separate text-index artifact for the delete-then-compact lifecycle
-    * query — after the fold, corpus stats are recomputed from the live
-    * rows, so the oracle's stats ALSO cover only the live slice (unlike
-    * [[textDeletePath]]'s bounded-staleness oracle). */
-  private def textCompactPath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "text_cmp").toString
   private def textCompactFingerprint(s: org.apache.spark.sql.SparkSession,
                                      dir: String): String =
     s"${Retrieval.TextLayoutVersion}|cmp|b=16|deleted=mod11eq5|compacted" +
       s"|${contentTag(Tables.documents(s, dir), s"docs|$dir")}"
 
-  /** Separate ANN artifact for the delete-then-compact lifecycle query
-    * (physical purge of tombstoned vectors; probe results must stay
-    * identical to the pre-fold tombstone view). */
-  private def annCompactPath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "ann_cmp").toString
-
-  /** Separate artifact for the build-then-append lifecycle query — the
-    * main [[annIndexPath]] index must stay whole-corpus-trained for the
-    * stored ≡ inline oracles. */
-  private def annAppendPath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "ann_app").toString
-
-  /** Separate artifact for the incremental semantic-dedup query —
-    * trained on the accumulated corpus WITHOUT the probe batch. */
-  private def annIncPath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "ann_inc").toString
-
-  /** Separate artifact for the grow-then-retrain lifecycle query —
-    * built STALE on half the corpus, appended past the drift
-    * threshold, then retrained on the full served corpus. */
-  private def annRetrainPath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "ann_ret").toString
-
-  /** Separate artifact for the takedown lifecycle query — built
-    * whole-corpus, then a slice tombstoned. */
-  private def annDeletePath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "ann_del").toString
-
-  /** Stored corpus band index for llm_dedup_incremental (same per-sfDir
-    * scratch contract as [[annIndexPath]]). */
-  private def bandIndexPath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "bands").toString
   private def bandFingerprint(s: org.apache.spark.sql.SparkSession,
                               dir: String): String =
     s"${Dedup.BandLayoutVersion}|$dir|k=32,r=4,n=3|built=mod10notin79|appended=mod10eq9|batch=mod10eq7" +
       s"|${contentTag(Tables.documents(s, dir), s"docs|$dir")}"
 
-  /** Separate band artifact for the takedown query — built on the full
-    * non-batch corpus, then a slice tombstoned. */
-  private def bandDeletePath(dir: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), "bands_del").toString
   private def bandDeleteFingerprint(s: org.apache.spark.sql.SparkSession,
                                     dir: String): String =
     s"${Dedup.BandLayoutVersion}|del|$dir|k=32,r=4,n=3|built=mod10ne7|deleted=mod10eq3|batch=mod10eq7" +
       s"|${contentTag(Tables.documents(s, dir), s"docs|$dir")}"
 
-  /** Stream-grown artifact roots (§2.I promotion, r12): the index-growth
-    * sinks write here through the REAL foreachBatch streams, then the
-    * same probes the batch-built indexes serve run against them —
-    * putting the stream-growth path itself behind the driver's hash
-    * gate. Sidecar fingerprint, written only AFTER the stream
-    * completes: a crash mid-growth leaves no fingerprint and the next
-    * run wipes and rebuilds (checkpoint included, so no stale
-    * replay-skip state survives a rebuild). */
-  private def growRoot(dir: String, name: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_idx",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"), name).toString
-  private def growFpFile(root: String) =
-    java.nio.file.Paths.get(root, "_growfp")
-  private def growCurrent(root: String, fp: String): Boolean =
-    try new String(java.nio.file.Files.readAllBytes(growFpFile(root)),
-      java.nio.charset.StandardCharsets.UTF_8) == fp
-    catch { case _: Exception => false }
   /** Recursive delete with the walk stream CLOSED (ADVICE r12: the
     * unclosed Files.walk leaked a directory handle per rebuild). */
   private def deleteTree(p: java.nio.file.Path): Unit =
@@ -273,14 +182,24 @@ object LlmQueries {
       }
     }
 
-  private def wipeAndGrow(root: String, fp: String)(grow: => Unit): Unit = {
-    val p = java.nio.file.Paths.get(root)
-    deleteTree(p)
-    java.nio.file.Files.createDirectories(p)
-    grow
-    java.nio.file.Files.write(growFpFile(root),
-      fp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+  /** Stream-grown artifact roots (§2.I promotion, r12): the index-growth
+    * sinks write here through the REAL foreachBatch streams, then the
+    * same probes the batch-built indexes serve run against them —
+    * putting the stream-growth path itself behind the driver's hash
+    * gate. Unless the root's `_growfp` sidecar already carries `fp`,
+    * the root is wiped and `grow` re-runs; the sidecar is written only
+    * AFTER the stream completes: a crash mid-growth leaves no
+    * fingerprint and the next run wipes and rebuilds (checkpoint
+    * included, so no stale replay-skip state survives a rebuild). */
+  private def growUnlessCurrent(s: org.apache.spark.sql.SparkSession, root: String,
+                                fp: String)(grow: => Unit): Unit =
+    if (!graft.tsdb.Keysets.readMarker(s, s"$root/_growfp").contains(fp)) {
+      val p = java.nio.file.Paths.get(root)
+      deleteTree(p)
+      java.nio.file.Files.createDirectories(p)
+      grow
+      graft.tsdb.Keysets.writeMarker(s, s"$root/_growfp", fp)
+    }
 
   /** Bench hook (ADVICE r12 lifecycle pricing): wipe ONE stream-growth
     * query's artifact root so its next run genuinely re-runs the
@@ -293,7 +212,7 @@ object LlmQueries {
       "stream_ivf_index_growth" -> "ann_grow",
       "stream_text_index_growth" -> "text_grow")
     roots.get(queryName).foreach { name =>
-      deleteTree(java.nio.file.Paths.get(growRoot(dir, name)))
+      deleteTree(java.nio.file.Paths.get(artifactPath(dir, name)))
     }
   }
 
@@ -303,9 +222,9 @@ object LlmQueries {
   private def ensureIncrementalBandIndex(s: org.apache.spark.sql.SparkSession,
                                          dir: String): Unit = {
     val docs = Tables.documents(s, dir)
-    val path = bandIndexPath(dir)
+    val path = artifactPath(dir, "bands")
     val fp = bandFingerprint(s, dir)
-    if (!(Dedup.bandIndexCurrent(s, path, fp) &&
+    if (!(graft.tsdb.Keysets.fingerprint(s, path).contains(fp) &&
           Dedup.bandDeltaCount(s, path) > 0)) {
       val m10 = pmod(col("doc_id"), lit(10))
       Dedup.buildBandIndex(s, docs.where(m10 =!= 7 && m10 =!= 9),
@@ -326,10 +245,10 @@ object LlmQueries {
   def prebuildArtifacts(s: org.apache.spark.sql.SparkSession,
                         dir: String): Unit = {
     Similarity.ensureIvfIndex(s, Tables.embeddings(s, dir),
-      annIndexPath(dir), annFingerprint(s, dir))
+      artifactPath(dir, "ann"), annFingerprint(s, dir))
     ensureIncrementalBandIndex(s, dir)
     Retrieval.ensureTextIndex(s, Tables.documents(s, dir), "doc_id", "text",
-      textIndexPath(dir), textFingerprint(s, dir))
+      artifactPath(dir, "text"), textFingerprint(s, dir))
   }
 
   val queries: Map[String, Q] = graft.core.Reg.uniqueMap(
@@ -617,7 +536,7 @@ object LlmQueries {
       val docs = Tables.documents(s, dir)
       ensureIncrementalBandIndex(s, dir)
       Dedup.incrementalNearDups(s, docs.where(pmod(col("doc_id"), lit(10)) === 7),
-        docs, bandIndexPath(dir))
+        docs, artifactPath(dir, "bands"))
     }),
 
     // §2.I stream_band_index_growth, PROMOTED to the driver gate (r12):
@@ -632,11 +551,11 @@ object LlmQueries {
     // HERE, not only in StreamSpec's batch-equivalence test.
     "stream_band_index_growth" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val root = growRoot(dir, "bands_grow")
+      val root = artifactPath(dir, "bands_grow")
       val idx = s"$root/idx"
       val fp = s"${Dedup.BandLayoutVersion}|grow|$dir|k=32,r=4,n=3" +
         s"|streamed=mod10ne7|batch=mod10eq7|${contentTag(docs, s"docs|$dir")}"
-      if (!growCurrent(root, fp)) wipeAndGrow(root, fp) {
+      growUnlessCurrent(s, root, fp) {
         val src = s"$root/src"
         graft.core.Phase.time("src_write") {
           docs.where(pmod(col("doc_id"), lit(10)) =!= 7)
@@ -664,10 +583,10 @@ object LlmQueries {
     // the hash.
     "stream_ivf_index_growth" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val root = growRoot(dir, "ann_grow")
+      val root = artifactPath(dir, "ann_grow")
       val idx = s"$root/idx"
       val fp = annFingerprint(s, dir) + "|train=mod7ne3|grown=stream3"
-      if (!growCurrent(root, fp)) wipeAndGrow(root, fp) {
+      growUnlessCurrent(s, root, fp) {
         graft.core.Phase.time("quantizer_train") {
           Similarity.buildIvfIndex(s,
             emb.where(pmod(col("vec_id"), lit(7)) =!= 3), idx, fp)
@@ -697,9 +616,10 @@ object LlmQueries {
     // side — deleted docs were never indexed, as far as probes can tell.
     "llm_dedup_index_delete" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val path = bandDeletePath(dir)
+      // own artifact: built on the full non-batch corpus, then a slice tombstoned
+      val path = artifactPath(dir, "bands_del")
       val fp = bandDeleteFingerprint(s, dir)
-      if (!(Dedup.bandIndexCurrent(s, path, fp) &&
+      if (!(graft.tsdb.Keysets.fingerprint(s, path).contains(fp) &&
             Dedup.bandDeltaCount(s, path) > 0)) {
         val m10 = pmod(col("doc_id"), lit(10))
         Dedup.buildBandIndex(s, docs.where(m10 =!= 7), "doc_id", "text", path, fp)
@@ -1100,7 +1020,7 @@ object LlmQueries {
     // the check.
     "llm_sim_ivf_stored" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annIndexPath(dir)
+      val path = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, path, annFingerprint(s, dir))
       val qs = emb.where(col("vec_id") < 4)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -1126,8 +1046,7 @@ object LlmQueries {
       val p = Similarity.IndexParams(
         k = 8, dim = 4,
         trainStride = math.min(250L, math.max(1L, n / 50000L)).toInt)
-      val path = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        "graft_idx", "synth", "ann_stride").toString
+      val path = artifactPath("synth", "ann_stride")
       Similarity.ensureIvfIndex(s, emb, path,
         p.fingerprint("synth-stride-v1"), p)
       val qs = emb.where(col("vec_id") < 4)
@@ -1142,7 +1061,7 @@ object LlmQueries {
     // over the pruned candidate fetch, strictly cheaper than top-k.
     "llm_sim_radius_stored" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annIndexPath(dir)
+      val path = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, path, annFingerprint(s, dir))
       val qs = emb.where(col("vec_id") < 4)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -1158,7 +1077,7 @@ object LlmQueries {
     // predicate on the candidate set.
     "llm_sim_ivf_filtered" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annIndexPath(dir)
+      val path = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, path, annFingerprint(s, dir))
       val qs = emb.where(col("vec_id") < 4)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -1170,7 +1089,7 @@ object LlmQueries {
     // the llm_sim_pq SQL verbatim (stored codes ≡ inline encode).
     "llm_sim_pq_stored" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annIndexPath(dir)
+      val path = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, path, annFingerprint(s, dir))
       val qv = emb.where(col("vec_id") === 0).select(col("embedding").as("qv"))
       Similarity.pqTopKStored(s, qv, path, 64, 10)
@@ -1184,9 +1103,10 @@ object LlmQueries {
     // but assigning every vector — exactly the append semantics.
     "llm_sim_ivf_appended" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annAppendPath(dir)
+      // own artifact: `ann` must stay whole-corpus-trained for the stored ≡ inline oracles
+      val path = artifactPath(dir, "ann_app")
       val fp = annFingerprint(s, dir) + "|train=mod7ne3"
-      if (!(Similarity.ivfIndexCurrent(s, path, fp) &&
+      if (!(graft.tsdb.Keysets.fingerprint(s, path).contains(fp) &&
             Similarity.ivfDeltaCount(s, path) > 0)) {
         Similarity.buildIvfIndex(s, emb.where(pmod(col("vec_id"), lit(7)) =!= 3),
           path, fp)
@@ -1209,9 +1129,10 @@ object LlmQueries {
     // half-corpus training would not hash-match).
     "llm_sim_ivf_retrained" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annRetrainPath(dir)
+      // own artifact: trained STALE on half the corpus, grown past drift, then retrained
+      val path = artifactPath(dir, "ann_ret")
       val fp = annFingerprint(s, dir) + "|retrained"
-      if (!Similarity.ivfIndexCurrent(s, path, fp)) {
+      if (!graft.tsdb.Keysets.fingerprint(s, path).contains(fp)) {
         Similarity.buildIvfIndex(s,
           emb.where(pmod(col("vec_id"), lit(2)) === 0), path, fp + "|stale")
         Similarity.appendIvfDelta(s,
@@ -1233,7 +1154,8 @@ object LlmQueries {
     // pairs — stored-index probe ≡ from-scratch recomputation.
     "llm_semdedup_incremental" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annIncPath(dir)
+      // own artifact: trained on the accumulated corpus WITHOUT the probe batch
+      val path = artifactPath(dir, "ann_inc")
       val fp = annFingerprint(s, dir) + "|train=mod9ne4"
       Similarity.ensureIvfIndex(s,
         emb.where(pmod(col("vec_id"), lit(9)) =!= 4), path, fp)
@@ -1249,9 +1171,10 @@ object LlmQueries {
     // candidate set filtered — exactly that semantic.
     "llm_sim_ivf_deleted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annDeletePath(dir)
+      // own artifact: built whole-corpus, then a slice tombstoned
+      val path = artifactPath(dir, "ann_del")
       val fp = annFingerprint(s, dir) + "|deleted=mod11eq5"
-      if (!(Similarity.ivfIndexCurrent(s, path, fp) &&
+      if (!(graft.tsdb.Keysets.fingerprint(s, path).contains(fp) &&
             Similarity.ivfDeltaCount(s, path) > 0)) {
         Similarity.buildIvfIndex(s, emb, path, fp)
         Similarity.deleteFromIvfIndex(s,
@@ -1271,7 +1194,7 @@ object LlmQueries {
     // twin of llm_text_index_stats' bookkeeping check.
     "llm_ann_index_stats" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annIndexPath(dir)
+      val path = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, path, annFingerprint(s, dir))
       Similarity.readLists(s, path)
         .groupBy(col("centroid_id").cast("long").as("centroid_id"))
@@ -1290,9 +1213,10 @@ object LlmQueries {
     // indistinguishable from a fresh build without it).
     "llm_sim_ivf_compacted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annCompactPath(dir)
+      // own artifact: tombstones purged; probes must equal the pre-fold tombstone view
+      val path = artifactPath(dir, "ann_cmp")
       val fp = annFingerprint(s, dir) + "|deleted=mod11eq5|compacted"
-      if (!(Similarity.ivfIndexCurrent(s, path, fp) &&
+      if (!(graft.tsdb.Keysets.fingerprint(s, path).contains(fp) &&
             Similarity.ivfFoldedThru(s, path) >= 0)) {
         Similarity.buildIvfIndex(s, emb, path, fp)
         Similarity.deleteFromIvfIndex(s,
@@ -1311,7 +1235,7 @@ object LlmQueries {
     // unrolls — approximate on both axes, exact in the math.
     "llm_sim_ivfpq_stored" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annIndexPath(dir)
+      val path = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, path, annFingerprint(s, dir))
       val qv = emb.where(col("vec_id") === 0).select(col("embedding").as("qv"))
       Similarity.ivfPqTopKStored(s, qv, path, 64, 10, nprobe = 2)
@@ -1324,7 +1248,7 @@ object LlmQueries {
     // selectivity; post-filtering the top-k would break recall
     "llm_sim_ivfpq_filtered" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annIndexPath(dir)
+      val path = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, path, annFingerprint(s, dir))
       val qv = emb.where(col("vec_id") === 0).select(col("embedding").as("qv"))
       Similarity.ivfPqTopKStoredFiltered(s, qv, path, col("label") < 5,
@@ -1379,7 +1303,8 @@ object LlmQueries {
     // and the self candidate removed before the rank window.
     "llm_knn_join_ivf" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annScaledIndexPath(dir)
+      // own artifact: `ann` stays k=8 (its oracle unrolls that Lloyd), so sharing thrashes
+      val path = artifactPath(dir, "ann_scaled")
       Similarity.ensureIvfIndex(s, emb, path, annScaledFingerprint(s, dir),
         scaledAnnParams(s, dir))
       Similarity.ivfKnnJoinStored(s, path, 3, nprobe = 2)
@@ -1396,7 +1321,8 @@ object LlmQueries {
     // same two Lloyd iterations with the same SQL-computed seed count.
     "llm_dedup_cosine" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = annScaledIndexPath(dir)
+      // own artifact: `ann` stays k=8 (its oracle unrolls that Lloyd), so sharing thrashes
+      val path = artifactPath(dir, "ann_scaled")
       Similarity.ensureIvfIndex(s, emb, path, annScaledFingerprint(s, dir),
         scaledAnnParams(s, dir))
       val assigned = Similarity.readLists(s, path)
@@ -1426,7 +1352,7 @@ object LlmQueries {
       // the quantizer training per run. The inline assignment path
       // stays exercised by llm_sim_ivf / llm_sim_ivf_batch.
       val emb = Tables.embeddings(s, dir)
-      val path = annIndexPath(dir)
+      val path = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, path, annFingerprint(s, dir))
       val assigned = Similarity.readLists(s, path)
         .select("vec_id", "embedding", "nrm", "centroid_id")
@@ -2200,7 +2126,7 @@ object LlmQueries {
     // order-independent sum; the oracle mirrors THIS formulation.
     "llm_bm25_indexed" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val path = textIndexPath(dir)
+      val path = artifactPath(dir, "text")
       Retrieval.ensureTextIndex(s, docs, "doc_id", "text", path,
         textFingerprint(s, dir))
       Retrieval.bm25TopKStored(s, path, Bm25Terms, 10)
@@ -2213,7 +2139,7 @@ object LlmQueries {
     "llm_bm25_batch" -> ((s, dir) => {
       import s.implicits._
       val docs = Tables.documents(s, dir)
-      val path = textIndexPath(dir)
+      val path = artifactPath(dir, "text")
       Retrieval.ensureTextIndex(s, docs, "doc_id", "text", path,
         textFingerprint(s, dir))
       val batch = Seq(1 -> "spark", 1 -> "merge", 2 -> "dup", 2 -> "spark",
@@ -2234,7 +2160,7 @@ object LlmQueries {
     "llm_retrieval_mrr" -> ((s, dir) => {
       import s.implicits._
       val docs = Tables.documents(s, dir)
-      val path = textIndexPath(dir)
+      val path = artifactPath(dir, "text")
       Retrieval.ensureTextIndex(s, docs, "doc_id", "text", path,
         textFingerprint(s, dir))
       val ws = filter(Dedup.words(col("text")), w => w =!= lit(""))
@@ -2273,11 +2199,11 @@ object LlmQueries {
     // batch or stats/postings skew breaks the hash here.
     "stream_text_index_growth" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val root = growRoot(dir, "text_grow")
+      val root = artifactPath(dir, "text_grow")
       val idx = s"$root/idx"
       val fp = s"${Retrieval.TextLayoutVersion}|grow|b=16|streamed=all" +
         s"|${contentTag(docs, s"docs|$dir")}"
-      if (!growCurrent(root, fp)) wipeAndGrow(root, fp) {
+      growUnlessCurrent(s, root, fp) {
         val src = s"$root/src"
         graft.core.Phase.time("src_write") {
           docs.repartition(3).write.parquet(src)
@@ -2294,9 +2220,10 @@ object LlmQueries {
 
     "llm_bm25_appended" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val path = textAppendPath(dir)
+      // own artifact: `text` must stay whole-corpus for the stored ≡ inline oracle
+      val path = artifactPath(dir, "text_app")
       val fp = textAppendFingerprint(s, dir)
-      if (!(Retrieval.textIndexFingerprint(s, path).contains(fp) &&
+      if (!(graft.tsdb.Keysets.fingerprint(s, path).contains(fp) &&
             Retrieval.textDeltaCount(s, path) > 0)) {
         Retrieval.buildTextIndex(s,
           docs.where(pmod(col("doc_id"), lit(10)) =!= 7), "doc_id", "text",
@@ -2316,9 +2243,10 @@ object LlmQueries {
     // stats over ALL docs, df + candidates over the live slice.
     "llm_bm25_deleted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val path = textDeletePath(dir)
+      // own artifact: built whole-corpus, then a slice tombstoned
+      val path = artifactPath(dir, "text_del")
       val fp = textDeleteFingerprint(s, dir)
-      if (!(Retrieval.textIndexFingerprint(s, path).contains(fp) &&
+      if (!(graft.tsdb.Keysets.fingerprint(s, path).contains(fp) &&
             Retrieval.textDeltaCount(s, path) > 0)) {
         Retrieval.buildTextIndex(s, docs, "doc_id", "text", path, fp)
         Retrieval.deleteFromTextIndex(s,
@@ -2336,7 +2264,7 @@ object LlmQueries {
     // there), survivors broadcast back against the postings.
     "llm_bm25_filtered" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val path = textIndexPath(dir)
+      val path = artifactPath(dir, "text")
       Retrieval.ensureTextIndex(s, docs, "doc_id", "text", path,
         textFingerprint(s, dir))
       Retrieval.bm25TopKStoredFiltered(s, path, Bm25Terms,
@@ -2360,7 +2288,7 @@ object LlmQueries {
     // text, so a green row proves the STORED offsets are faithful.
     "llm_phrase_indexed" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val path = textIndexPath(dir)
+      val path = artifactPath(dir, "text")
       Retrieval.ensureTextIndex(s, docs, "doc_id", "text", path,
         textFingerprint(s, dir))
       Retrieval.phraseTopKStored(s, path, PhraseTerms, 10)
@@ -2374,7 +2302,7 @@ object LlmQueries {
     // stats match the corpus) — not just the probe path.
     "llm_text_index_stats" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val path = textIndexPath(dir)
+      val path = artifactPath(dir, "text")
       Retrieval.ensureTextIndex(s, docs, "doc_id", "text", path,
         textFingerprint(s, dir))
       Retrieval.textIndexStats(s, path)
@@ -2392,9 +2320,10 @@ object LlmQueries {
     // count is 0 again, indistinguishable from a fresh build without it.
     "llm_bm25_compacted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val path = textCompactPath(dir)
+      // own artifact: the fold recomputes stats over the live slice (text_del keeps stale ones)
+      val path = artifactPath(dir, "text_cmp")
       val fp = textCompactFingerprint(s, dir)
-      if (!(Retrieval.textIndexFingerprint(s, path).contains(fp) &&
+      if (!(graft.tsdb.Keysets.fingerprint(s, path).contains(fp) &&
             Retrieval.textFoldedThru(s, path) >= 0)) {
         Retrieval.buildTextIndex(s, docs, "doc_id", "text", path, fp)
         Retrieval.deleteFromTextIndex(s,
@@ -2430,13 +2359,13 @@ object LlmQueries {
     // indexed-BM25 formulation + the whole-corpus Lloyd probe CTEs.
     "llm_hybrid_rrf_stored" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val tpath = textIndexPath(dir)
+      val tpath = artifactPath(dir, "text")
       Retrieval.ensureTextIndex(s, docs, "doc_id", "text", tpath,
         textFingerprint(s, dir))
       val bmPool = Retrieval.bm25TopKStored(s, tpath, Bm25Terms, 20)
         .withColumnRenamed("doc_id", "id")
       val emb = Tables.embeddings(s, dir)
-      val apath = annIndexPath(dir)
+      val apath = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, apath, annFingerprint(s, dir))
       val qs = emb.where(col("vec_id") === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -2455,14 +2384,14 @@ object LlmQueries {
     // top-k would under-fill the pools).
     "llm_hybrid_rrf_filtered" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val tpath = textIndexPath(dir)
+      val tpath = artifactPath(dir, "text")
       Retrieval.ensureTextIndex(s, docs, "doc_id", "text", tpath,
         textFingerprint(s, dir))
       val bmPool = Retrieval.bm25TopKStoredFiltered(s, tpath, Bm25Terms,
         docs.where(pmod(col("doc_id"), lit(2)) === 0).select("doc_id"), 20)
         .withColumnRenamed("doc_id", "id")
       val emb = Tables.embeddings(s, dir)
-      val apath = annIndexPath(dir)
+      val apath = artifactPath(dir, "ann")
       Similarity.ensureIvfIndex(s, emb, apath, annFingerprint(s, dir))
       val qs = emb.where(col("vec_id") === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))

@@ -151,23 +151,6 @@ object Retrieval {
     * the index). */
   val TextLayoutVersion = "text-v3"
 
-  private def textMetaPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_meta")
-
-  /** The committed build fingerprint at `path` (None = no index). */
-  def textIndexFingerprint(s: org.apache.spark.sql.SparkSession,
-                           path: String): Option[String] = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val mp = textMetaPath(path)
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
-  }
-
   /** Tokenized posting rows + the matching single-row stats for one doc
     * batch — THE shared definition between build and append (a drifted
     * append-side tokenizer would silently corrupt df/tf). Stats carry
@@ -210,10 +193,7 @@ object Retrieval {
     graft.tsdb.Keysets.swapBuiltDir(s, path) { tmp =>
       postings.write.partitionBy("tb").parquet(s"$tmp/postings")
       stats.coalesce(1).write.parquet(s"$tmp/postings/_stats")
-      val fs = textMetaPath(tmp).getFileSystem(s.sparkContext.hadoopConfiguration)
-      val out = fs.create(textMetaPath(tmp), true)
-      try out.write(fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      graft.tsdb.Keysets.writeMarker(s, s"$tmp/_meta", fingerprint)
     }
   }
 
@@ -244,11 +224,8 @@ object Retrieval {
     * compacted) — the did-compaction-actually-run guard: after a fold,
     * delta count drops back to 0, so the watermark is the only durable
     * evidence distinguishing a compacted index from a fresh build. */
-  def textFoldedThru(s: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.tsdb.Keysets.foldedThru(fs, path, "postings")
-  }
+  def textFoldedThru(s: org.apache.spark.sql.SparkSession, path: String): Int =
+    graft.tsdb.Keysets.foldedThru(s, path, "postings")
 
   /** O(batch) index growth: tokenize the new docs with the STORED
     * bucket modulus and commit them as one atomic delta dir (postings +
@@ -356,7 +333,7 @@ object Retrieval {
   def ensureTextIndex(s: org.apache.spark.sql.SparkSession, docs: DataFrame,
                       idCol: String, textCol: String, path: String,
                       fingerprint: String, buckets: Int = 16): Unit =
-    if (!textIndexFingerprint(s, path).contains(fingerprint))
+    if (!graft.tsdb.Keysets.fingerprint(s, path).contains(fingerprint))
       buildTextIndex(s, docs, idCol, textCol, path, fingerprint, buckets)
 
   /** BM25 top-k off the STORED index: reads the query terms' hash-bucket

@@ -837,13 +837,15 @@ object Similarity {
   //               corpus
   //   _meta       build fingerprint ([[ensureIvfIndex]] no-ops when
   //               the stored index is current)
+  //   _trained, lists/_appended   drift counts ([[deltaFraction]])
 
   /** On-disk layout version of the ANN artifact — leads every ensure
     * fingerprint so a layout refactor forces a rebuild instead of
     * silently serving an old-layout artifact to new probe code. Bump
     * rule: increment whenever the directory layout above or any stored
-    * schema changes. */
-  val AnnLayoutVersion = "ivf-v1"
+    * schema changes (v2: the `_trained` and `lists/_appended` markers
+    * are required). */
+  val AnnLayoutVersion = "ivf-v2"
 
   /** Parameters of a persisted index build; the fingerprint pins the
     * ARTIFACT LAYOUT version, them, and the caller-supplied corpus
@@ -864,28 +866,6 @@ object Similarity {
         s"|dim=$dim|ts=$trainStride"
   }
 
-  private def metaPath(path: String) = new org.apache.hadoop.fs.Path(s"$path/_meta")
-
-  /** The committed build fingerprint at `path`, None when no index has
-    * been committed there. Public so maintenance code (the streaming
-    * auto-retrain sink) can derive the retrained artifact's tag from
-    * the one it replaces. */
-  def indexFingerprint(s: SparkSession, path: String): Option[String] = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val mp = metaPath(path)
-    val fs = mp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
-  }
-
-  /** True iff a committed index at `path` carries `fingerprint`. */
-  def ivfIndexCurrent(s: SparkSession, path: String, fingerprint: String): Boolean =
-    indexFingerprint(s, path).contains(fingerprint)
-
   /** Build the persisted ANN index (IVF inverted lists + PQ codes) for
     * `vectors` at `path`. EAGER by nature (this IS the training run);
     * the swap commits atomically, so readers never see a half-built
@@ -904,7 +884,7 @@ object Similarity {
   private def buildIvfIndexCarrying(s: SparkSession, vectors: DataFrame,
                                     path: String, fingerprint: String,
                                     p: IndexParams,
-                                    carryListsFiles: Map[String, Array[Byte]]): Unit = {
+                                    carryListsFiles: Map[String, String]): Unit = {
     import s.implicits._
     // trainStride restricts what the quantizer LEARNS from; the lists
     // below still assign and store the full corpus
@@ -939,10 +919,7 @@ object Similarity {
       cdf.coalesce(1).write.parquet(s"$tmp/centroids")
       cbdf.coalesce(1).write.parquet(s"$tmp/codebooks")
       lists.write.partitionBy("centroid_id").parquet(s"$tmp/lists")
-      val fs = metaPath(tmp).getFileSystem(s.sparkContext.hadoopConfiguration)
-      val out = fs.create(metaPath(tmp), true)
-      try out.write(fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      graft.tsdb.Keysets.writeMarker(s, s"$tmp/_meta", fingerprint)
       // pin the TRAINED corpus size with the artifact: [[deltaFraction]]
       // measures drift against this number, so the signal survives
       // delta compaction — folding appended rows into the base bounds
@@ -952,65 +929,31 @@ object Similarity {
       // (r15: counted off the persisted frame just written — same
       // value as the former freshly-written-footer count, without
       // re-listing the lists dir.)
-      writeLongMarker(fs, s"$tmp/_trained", lists.count())
+      graft.tsdb.Keysets.writeMarker(s, s"$tmp/_trained", lists.count().toString)
       // cumulative appended mass folded into the base so far: starts
       // at 0, advanced by compaction (the marker lives INSIDE lists/
       // to ride its atomic swap); underscore files are invisible to
       // the parquet reader, like _folded
-      writeLongMarker(fs, s"$tmp/lists/_appended", 0L)
-      carryListsFiles.foreach { case (name, bytes) =>
-        val out2 = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/lists/$name"), true)
-        try out2.write(bytes) finally out2.close()
+      graft.tsdb.Keysets.writeMarker(s, s"$tmp/lists/_appended", "0")
+      carryListsFiles.foreach { case (name, text) =>
+        graft.tsdb.Keysets.writeMarker(s, s"$tmp/lists/$name", text)
       }
     } finally { lists.unpersist(); () }
   }
 
-  private def writeLongMarker(fs: org.apache.hadoop.fs.FileSystem,
-                              p: String, v: Long): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(p), true)
-    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+  /** A count marker [[buildIvfIndex]] pins with the artifact (every
+    * `ivf-v2` index carries `_trained` and `lists/_appended`). */
+  private def longMarker(s: SparkSession, path: String): Long = {
+    val m = graft.tsdb.Keysets.readMarker(s, path)
+    require(m.isDefined, s"missing IVF marker $path — rebuild the index")
+    m.get.trim.toLong
   }
-
-  private def readBytesMarker(fs: org.apache.hadoop.fs.FileSystem,
-                              p: String): Option[Array[Byte]] = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    if (!fs.exists(hp)) None
-    else {
-      val in = fs.open(hp)
-      try Some(in.readAllBytes()) finally in.close()
-    }
-  }
-
-  private def readLongMarker(s: SparkSession, p: String): Option[Long] = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) None
-    else {
-      val in = fs.open(hp)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
-
-  /** The corpus size the stored quantizer TRAINED on — the `_trained`
-    * marker [[buildIvfIndex]] pins with the artifact; pre-marker
-    * indexes fall back to the base-lists footer count (correct until
-    * their first compaction folds deltas in). The fallback repairs an
-    * interrupted compaction swap of the lists subdir first — the same
-    * recovery every other lists reader performs. */
-  private def trainedCount(s: SparkSession, path: String): Long =
-    readLongMarker(s, s"$path/_trained").getOrElse {
-      graft.tsdb.Keysets.repairSwap(s, s"$path/lists")
-      s.read.parquet(s"$path/lists").count()
-    }
 
   /** [[buildIvfIndex]] only when the stored index isn't current — the
     * build-once/probe-many entry point query registrations use. */
   def ensureIvfIndex(s: SparkSession, vectors: DataFrame, path: String,
                      fingerprint: String, p: IndexParams = IndexParams()): Unit =
-    if (!ivfIndexCurrent(s, path, fingerprint))
+    if (!graft.tsdb.Keysets.fingerprint(s, path).contains(fingerprint))
       buildIvfIndex(s, vectors, path, fingerprint, p)
 
   /** Batched IVF probe of a STORED index: same probe plan as
@@ -1117,11 +1060,8 @@ object Similarity {
     * compacted) — after a fold the delta count is 0 again, so this
     * watermark is the only durable did-compaction-run evidence (the
     * text-index twin is [[Retrieval.textFoldedThru]]). */
-  def ivfFoldedThru(s: SparkSession, path: String): Int = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    graft.tsdb.Keysets.foldedThru(fs, path, "lists")
-  }
+  def ivfFoldedThru(s: SparkSession, path: String): Int =
+    graft.tsdb.Keysets.foldedThru(s, path, "lists")
 
   /** Quantizer-drift signal for the append-without-retrain trade: the
     * fraction of the served corpus the stored quantizer never trained
@@ -1140,11 +1080,10 @@ object Similarity {
     * maintenance job checks this per index and schedules
     * [[buildIvfIndex]] (which re-pins both markers) when it trips
     * (see LlmSpec's measured recall-vs-appended-mass point and
-    * PERF.md). Pre-marker (legacy) bases fall back to
-    * `max(0, base − trained)`. */
+    * PERF.md). */
   def deltaFraction(s: SparkSession, path: String): Double = {
     graft.tsdb.Keysets.repairSwap(s, path)
-    val trained = trainedCount(s, path)
+    val trained = longMarker(s, s"$path/_trained")
     require(trained > 0, s"deltaFraction: empty trained base at $path")
     appendedMass(s, path).toDouble / trained.toDouble
   }
@@ -1153,13 +1092,7 @@ object Similarity {
     * live rows of visible deltas. */
   private def appendedMass(s: SparkSession, path: String): Long = {
     graft.tsdb.Keysets.repairSwap(s, s"$path/lists")
-    val foldedIn = readLongMarker(s, s"$path/lists/_appended").getOrElse {
-      // legacy base without the marker: whatever exceeds the trained
-      // count must have been folded in by a pre-marker compaction
-      math.max(0L, s.read.parquet(s"$path/lists").count() -
-        readLongMarker(s, s"$path/_trained")
-          .getOrElse(s.read.parquet(s"$path/lists").count()))
-    }
+    val foldedIn = longMarker(s, s"$path/lists/_appended")
     val visible = graft.tsdb.Keysets.deltaDirs(s, path, "lists").map { d =>
       val df = s.read.parquet(s"$d/lists")
       if (df.columns.contains("tomb")) df.where(col("tomb").isNull).count()
@@ -1208,10 +1141,8 @@ object Similarity {
                       p: IndexParams = IndexParams()): Unit = {
     compactIvfDeltas(s, path)
     graft.tsdb.Keysets.repairSwap(s, s"$path/lists")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val carried = Seq("_txn", "_folded")
-      .flatMap(n => readBytesMarker(fs, s"$path/lists/$n").map(n -> _)).toMap
+      .flatMap(n => graft.tsdb.Keysets.readMarker(s, s"$path/lists/$n").map(n -> _)).toMap
     val served = s.read.parquet(s"$path/lists")
     // the served rows stripped back to input columns — nrm, codes and
     // the assignment are all functions of the quantizer being replaced
@@ -1344,9 +1275,7 @@ object Similarity {
       if (live.isEmpty) live.repartition(1).write.parquet(tmp)
       else live.repartition(col("centroid_id"))
         .write.partitionBy("centroid_id").parquet(tmp)
-      writeLongMarker(new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration),
-        s"$tmp/_appended", appended)
+      graft.tsdb.Keysets.writeMarker(s, s"$tmp/_appended", appended.toString)
     }
   }
 

@@ -637,8 +637,8 @@ object Ingest {
           // tag derives from the fingerprint being replaced; the
           // retrained@ suffix is replaced, not stacked, so repeated
           // retrains keep the tag bounded
-          val base = graft.llm.Similarity
-            .indexFingerprint(batch.sparkSession, indexPath)
+          val base = graft.tsdb.Keysets
+            .fingerprint(batch.sparkSession, indexPath)
             .getOrElse("ivf").replaceAll("\\|retrained@.*$", "")
           graft.llm.Similarity.retrainIvfIndex(batch.sparkSession, indexPath,
             s"$base|retrained@$checkpoint:$batchId", retrainParams)
@@ -656,29 +656,21 @@ object Ingest {
     * sliver of every series, so a range query touches every batch
     * footer forever without compaction). Points are immutable rows, so
     * this is pure re-layout; contents are unchanged. Same whole-dir
-    * write-then-rename swap and single-writer maintenance-window
-    * contract as [[graft.tsdb.Rollups.compactDeltas]] — the streaming
-    * appender repairs an interrupted swap before landing a batch. */
+    * [[graft.tsdb.Keysets.swapBuiltDir]] swap and single-writer
+    * maintenance-window contract as [[graft.tsdb.Rollups.compactDeltas]]
+    * — the streaming appender repairs an interrupted swap before
+    * landing a batch. */
   def compactPoints(s: SparkSession, pointsPath: String): Unit = {
     graft.tsdb.Keysets.repairSwap(s, pointsPath)
     val destP = new org.apache.hadoop.fs.Path(pointsPath)
-    val fs = destP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(destP)) return
-    val tmpP = new org.apache.hadoop.fs.Path(pointsPath + ".tmp")
-    if (fs.exists(tmpP) && !fs.delete(tmpP, true))
-      throw new java.io.IOException(s"could not clear stale $tmpP")
-    s.read.parquet(pointsPath).drop("batch")
-      .repartition(col("metric"))
-      .sortWithinPartitions("ts_ms", "value")
-      .write.partitionBy("metric")
-      .parquet(new org.apache.hadoop.fs.Path(tmpP, "batch=compacted").toString)
-    fs.create(new org.apache.hadoop.fs.Path(tmpP, "_SUCCESS"), true).close()
-    if (!fs.delete(destP, true))
-      throw new java.io.IOException(s"could not delete $destP for swap")
-    if (!fs.rename(tmpP, destP))
-      throw new java.io.IOException(
-        s"rename $tmpP -> $destP failed; previous state preserved at $tmpP")
-    ()
+    if (!destP.getFileSystem(s.sparkContext.hadoopConfiguration).exists(destP)) return
+    graft.tsdb.Keysets.swapBuiltDir(s, pointsPath) { tmp =>
+      s.read.parquet(pointsPath).drop("batch")
+        .repartition(col("metric"))
+        .sortWithinPartitions("ts_ms", "value")
+        .write.partitionBy("metric")
+        .parquet(s"$tmp/batch=compacted")
+    }
   }
 
   /** Partitioned parquet point sink (§2.A sink_parquet_partitioned):

@@ -52,7 +52,7 @@ object Catalog {
   //
   // The persisted catalog is split into [[CatalogBuckets]] hash buckets
   // of the series key; each bucket is an INDEPENDENT swap-managed
-  // parquet table (Keysets.swapInto/repairSwap crash contract). An
+  // parquet table (Keysets.swapBuiltDir/repairSwap crash contract). An
   // incremental upsert rewrites ONLY buckets that gained a new series —
   // the full-catalog rewrite per micro-batch was the first thing that
   // would fall over on a real cluster (steady-state cost proportional
@@ -140,7 +140,7 @@ object Catalog {
           // each affected bucket lands from exactly one task
           merged.repartition(col("b"))
             .write.mode("overwrite").partitionBy("b").parquet(staging)
-          affected.foreach(b => swapStagedBucket(fs, staging, catalogPath, b))
+          affected.foreach(b => swapStagedBucket(s, staging, catalogPath, b))
           // staged output is spent once every bucket swapped (committer
           // _SUCCESS + emptied partition dirs would otherwise accumulate
           // forever); readers never address _staging, so this is pure
@@ -152,33 +152,25 @@ object Catalog {
     } finally { withB.unpersist(); () }
   }
 
-  /** Swap one staged bucket (`$staging/b=$b`) into place, or DELETE the
-    * bucket when the staged write produced no content for it (every
-    * series died). Marker-BEFORE-destination-delete ordering, identical
-    * to Keysets.swapInto, so repairSwap's recovery applies; a missing
-    * staged dir deleting the dest is idempotent (the intended end state
-    * has no bucket — a replay after a crash finds nothing to redo). */
-  private def swapStagedBucket(fs: org.apache.hadoop.fs.FileSystem,
-                               staging: String, catalogPath: String, b: Int): Unit = {
+  /** Swap one staged bucket (`$staging/b=$b`) into place: swapBuiltDir
+    * renames the staged dir in as its `.tmp`, so repairSwap's recovery
+    * applies. When the staged write produced no content for the bucket
+    * (every series died) the bucket is DELETED instead — idempotent, as
+    * the intended end state has no bucket and a replay after a crash
+    * finds nothing to redo. */
+  private def swapStagedBucket(s: SparkSession, staging: String,
+                               catalogPath: String, b: Int): Unit = {
     val dest = bucketPath(catalogPath, b)
     val destP = new org.apache.hadoop.fs.Path(dest)
-    val tmpP = new org.apache.hadoop.fs.Path(dest + ".tmp")
     val stagedP = new org.apache.hadoop.fs.Path(s"$staging/b=$b")
+    val fs = destP.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(stagedP)) {
       if (fs.exists(destP) && !fs.delete(destP, true))
         throw new java.io.IOException(s"could not delete emptied $destP")
-      return
+    } else Keysets.swapBuiltDir(s, dest) { tmp =>
+      if (!fs.rename(stagedP, new org.apache.hadoop.fs.Path(tmp)))
+        throw new java.io.IOException(s"rename $stagedP -> $tmp failed")
     }
-    if (fs.exists(tmpP) && !fs.delete(tmpP, true))
-      throw new java.io.IOException(s"could not clear stale $tmpP")
-    if (!fs.rename(stagedP, tmpP))
-      throw new java.io.IOException(s"rename $stagedP -> $tmpP failed")
-    fs.create(new org.apache.hadoop.fs.Path(tmpP, "_SUCCESS"), true).close()
-    if (fs.exists(destP) && !fs.delete(destP, true))
-      throw new java.io.IOException(s"could not delete $destP for swap")
-    if (!fs.rename(tmpP, destP))
-      throw new java.io.IOException(
-        s"rename $tmpP -> $destP failed; previous state preserved at $tmpP")
   }
 
   /** Retention for the catalog itself — the ES-index analog of point
@@ -218,7 +210,7 @@ object Catalog {
           // affected bucket instead of tasks × buckets writer inits
           survivors.repartition(col("b"))
             .write.mode("overwrite").partitionBy("b").parquet(staging)
-          affected.foreach(b => swapStagedBucket(fs, staging, catalogPath, b))
+          affected.foreach(b => swapStagedBucket(s, staging, catalogPath, b))
           val stagingP = new org.apache.hadoop.fs.Path(staging)
           if (fs.exists(stagingP)) { fs.delete(stagingP, true); () }
         }

@@ -27,45 +27,19 @@ object Keysets {
       if (fs.exists(p))
         s.read.parquet(registryPath).where(col("ksid") =!= ksid).unionByName(row)
       else row
-    swapInto(s, merged, registryPath)
+    swapBuiltDir(s, registryPath)(tmp => merged.write.parquet(tmp))
   }
 
-  /** Write-then-rename swap: the crash window is the metadata rename, not
-    * a data rewrite. Hadoop FileSystem signals failure via RETURN VALUE,
-    * not exceptions — ignoring it would leave the destination deleted
-    * with no error. (A transactional table format is the real-cluster
-    * answer; these state tables are small and single-writer by contract.) */
-  private[graft] def swapInto(s: SparkSession, df: DataFrame, dest: String): Unit = {
-    val destP = new org.apache.hadoop.fs.Path(dest)
-    val tmpP = new org.apache.hadoop.fs.Path(dest + ".tmp")
-    val fs = destP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    df.write.mode("overwrite").parquet(tmpP.toString)
-    // The `_SUCCESS` marker is repairSwap's commit signal. Write it
-    // ourselves instead of relying on the committer's, so recovery does
-    // not silently break when a session runs with
-    // mapreduce.fileoutputcommitter.marksuccessfuljobs=false. Ordering
-    // keeps the window safe: a crash before this line leaves the
-    // destination untouched (delete happens below), so an unmarked .tmp
-    // never holds the only copy of the state.
-    fs.create(new org.apache.hadoop.fs.Path(tmpP, "_SUCCESS"), true).close()
-    if (fs.exists(destP) && !fs.delete(destP, true))
-      throw new java.io.IOException(s"could not delete $destP for swap")
-    if (!fs.rename(tmpP, destP))
-      throw new java.io.IOException(s"rename $tmpP -> $destP failed; " +
-        s"previous state preserved at $tmpP")
-    ()
-  }
-
-  /** Finish an interrupted swap before touching a swapInto-managed table.
-    * swapInto fully writes (and commits — Spark leaves a `_SUCCESS`
-    * marker) the `.tmp` BEFORE deleting the destination, so a missing
-    * destination with a COMMITTED `.tmp` means the crash hit the
-    * delete→rename window and the `.tmp` holds the current state:
-    * complete the rename. A `.tmp` WITHOUT the marker is a crashed
-    * in-progress write — no state was ever lost — and is ignored (the
-    * next swap's overwrite replaces it). Repairing eagerly (instead of
-    * reading from `.tmp` in place) also keeps writers safe: a
-    * read-from-.tmp feeding swapInto would overwrite its own input. */
+  /** Finish an interrupted swap before touching a swap-managed table.
+    * [[swapBuiltDir]] fully writes and commits (`_SUCCESS`) the `.tmp`
+    * BEFORE deleting the destination, so a missing destination with a
+    * COMMITTED `.tmp` means the crash hit the delete→rename window and
+    * the `.tmp` holds the current state: complete the rename. A `.tmp`
+    * WITHOUT the marker is a crashed in-progress write — no state was
+    * ever lost — and is ignored (the next swap clears it). Repairing
+    * eagerly (instead of reading from `.tmp` in place) also keeps
+    * writers safe: a read-from-.tmp feeding a swap would overwrite its
+    * own input. */
   private[graft] def repairSwap(s: SparkSession, dest: String): Unit = {
     val destP = new org.apache.hadoop.fs.Path(dest)
     val fs = destP.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -78,11 +52,25 @@ object Keysets {
     }
   }
 
-  /** [[swapInto]] generalized to a MULTI-TABLE artifact directory (e.g.
-    * the ANN index: centroids + codebooks + inverted lists + meta):
-    * `build` populates the `.tmp` dir with whatever tables/files the
-    * artifact needs, then the same marker-before-delete rename contract
-    * applies — so [[repairSwap]] recovers these artifacts unchanged. */
+  /** THE write-then-rename commit every persisted table and artifact
+    * directory goes through (state tables, catalog buckets, compacted
+    * points and rollups, the ANN / band / text indexes and their
+    * deltas): `build` populates the `.tmp` dir with whatever tables or
+    * marker files the artifact needs, then the marker-before-delete
+    * rename below commits it, so [[repairSwap]] recovers every one of
+    * them the same way. The crash window is the metadata rename, not a
+    * data rewrite. Hadoop FileSystem signals failure via RETURN VALUE,
+    * not exceptions — ignoring it would leave the destination deleted
+    * with no error. (A transactional table format is the real-cluster
+    * answer; these tables are small and single-writer by contract.)
+    *
+    * The `_SUCCESS` marker is repairSwap's commit signal. It is written
+    * here instead of relying on the committer's, so recovery does not
+    * silently break when a session runs with
+    * mapreduce.fileoutputcommitter.marksuccessfuljobs=false. Ordering
+    * keeps the window safe: a crash before the marker leaves the
+    * destination untouched (the delete comes after it), so an unmarked
+    * .tmp never holds the only copy of the state. */
   private[graft] def swapBuiltDir(s: SparkSession, dest: String)
                                  (build: String => Unit): Unit = {
     val destP = new org.apache.hadoop.fs.Path(dest)
@@ -98,6 +86,38 @@ object Keysets {
       throw new java.io.IOException(s"rename $tmpP -> $destP failed; " +
         s"previous state preserved at $tmpP")
     ()
+  }
+
+  /** Contents of the small UTF-8 marker file at `path` (`_meta`,
+    * `_txn`, `_folded`, `_trained`, ...); None when it does not exist. */
+  private[graft] def readMarker(s: SparkSession, path: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    }
+  }
+
+  /** Write (or overwrite) the UTF-8 marker file at `path`. Markers that
+    * must commit with an artifact are written inside its
+    * [[swapBuiltDir]] build callback. */
+  private[graft] def writeMarker(s: SparkSession, path: String, text: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val out = p.getFileSystem(s.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** The committed build fingerprint (`_meta`) of the artifact at
+    * `path`, after finishing any interrupted swap; None when no
+    * artifact has been committed there. Ensure-style callers rebuild
+    * unless `fingerprint(s, path).contains(fp)`. */
+  def fingerprint(s: SparkSession, path: String): Option[String] = {
+    repairSwap(s, path)
+    readMarker(s, s"$path/_meta")
   }
 
   // ----------------------- delta-dir lifecycle (grow-without-rebuild)
@@ -116,17 +136,8 @@ object Keysets {
 
   private val DeltaRe = "delta_(\\d+)".r
 
-  private[graft] def foldedThru(fs: org.apache.hadoop.fs.FileSystem,
-                                path: String, sub: String): Int = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/$sub/_folded")
-    if (!fs.exists(mp)) -1
-    else {
-      val in = fs.open(mp)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        .trim.toInt
-      finally in.close()
-    }
-  }
+  private[graft] def foldedThru(s: SparkSession, path: String, sub: String): Int =
+    readMarker(s, s"$path/$sub/_folded").fold(-1)(_.trim.toInt)
 
   /** Committed, un-folded delta dirs under `path`, ascending; any delta
     * caught in the swap crash window is repaired first. */
@@ -135,7 +146,7 @@ object Keysets {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Nil
-    val folded = foldedThru(fs, path, sub)
+    val folded = foldedThru(s, path, sub)
     fs.listStatus(p).toIndexedSeq.map(_.getPath.getName).collect {
       case n @ DeltaRe(_) => n
       case t @ _ if t.endsWith(".tmp") && DeltaRe.matches(t.stripSuffix(".tmp")) =>
@@ -200,10 +211,8 @@ object Keysets {
     * to readers). `write` stages the batch under `$tmp/$sub`. */
   private[graft] def appendDelta(s: SparkSession, path: String, sub: String)
                                 (write: String => Unit): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val next = (deltaDirs(s, path, sub).map(deltaId(_) + 1)
-      :+ (foldedThru(fs, path, sub) + 1) :+ 0).max
+      :+ (foldedThru(s, path, sub) + 1) :+ 0).max
     swapBuiltDir(s, f"$path/delta_$next%04d") { tmp =>
       write(s"$tmp/$sub")
     }
@@ -219,40 +228,27 @@ object Keysets {
   // survives folding. A replayed micro-batch compares its id against
   // the committed watermark and lands nothing.
 
-  private def parseTxn(fs: org.apache.hadoop.fs.FileSystem,
-                       dir: String): Map[String, Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_txn")
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+  private def parseTxn(s: SparkSession, dir: String): Map[String, Long] =
+    readMarker(s, s"$dir/_txn").fold(Map.empty[String, Long]) { txt =>
       txt.linesIterator.filter(_.contains("=")).map { l =>
         val i = l.lastIndexOf('=')
         l.substring(0, i) -> l.substring(i + 1).trim.toLong
       }.toMap
     }
-  }
 
-  private def writeTxn(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                       txn: Map[String, Long]): Unit = {
-    if (txn.isEmpty) return
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/_txn"), true)
-    try out.write(txn.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def writeTxn(s: SparkSession, dir: String, txn: Map[String, Long]): Unit =
+    if (txn.nonEmpty)
+      writeMarker(s, s"$dir/_txn",
+        txn.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("\n"))
 
   /** Highest batch id `streamId` has committed to this artifact:
     * max over the base table's merged `_txn` and every visible
     * delta's `_txn`; -1 when the stream has never written. */
   private[graft] def committedBatch(s: SparkSession, path: String, sub: String,
                                     streamId: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     repairSwap(s, s"$path/$sub")
     val dirs = s"$path/$sub" +: deltaDirs(s, path, sub)
-    dirs.flatMap(d => parseTxn(fs, d).get(streamId)).foldLeft(-1L)(math.max)
+    dirs.flatMap(d => parseTxn(s, d).get(streamId)).foldLeft(-1L)(math.max)
   }
 
   /** Land one micro-batch exactly once: skipped (returns false) when
@@ -265,13 +261,11 @@ object Keysets {
                                     streamId: String, batchId: Long)
                                    (write: String => Unit): Boolean = {
     if (committedBatch(s, path, sub, streamId) >= batchId) return false
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     appendDelta(s, path, sub) { tmp =>
       write(tmp)
       // tmp is "$delta.tmp/$sub"-shaped only for the payload; the txn
       // marker sits at the delta ROOT so readers of any sub see it
-      writeTxn(fs, new org.apache.hadoop.fs.Path(tmp).getParent.toString,
+      writeTxn(s, new org.apache.hadoop.fs.Path(tmp).getParent.toString,
         Map(streamId -> batchId))
     }
     true
@@ -290,17 +284,15 @@ object Keysets {
     if (deltas.isEmpty) return
     val maxId = deltas.map(deltaId).max
     val txn = (s"$path/$sub" +: deltas)
-      .map(d => parseTxn(fs, d))
+      .map(d => parseTxn(s, d))
       .foldLeft(Map.empty[String, Long]) { (acc, m) =>
         m.foldLeft(acc) { case (a, (k, v)) => a.updated(k, math.max(v, a.getOrElse(k, -1L))) }
       }
     val merged = readWithDeltas(s, path, sub)
     swapBuiltDir(s, s"$path/$sub") { tmp =>
       rewrite(merged, tmp)
-      val out = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/_folded"), true)
-      try out.write(maxId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      writeTxn(fs, tmp, txn)
+      writeMarker(s, s"$tmp/_folded", maxId.toString)
+      writeTxn(s, tmp, txn)
     }
     deltas.foreach { d =>
       val dp = new org.apache.hadoop.fs.Path(d)
@@ -315,12 +307,12 @@ object Keysets {
 
   def drop(s: SparkSession, registryPath: String, ksid: String): Unit = {
     repairSwap(s, registryPath)
-    // no driver-side collect needed: swapInto fully writes to a .tmp
-    // path BEFORE deleting the destination, so the lazy read is
+    // no driver-side collect needed: swapBuiltDir fully writes to a
+    // .tmp path BEFORE deleting the destination, so the lazy read is
     // materialized while its source still exists (same pattern as
     // create())
-    swapInto(s, s.read.parquet(registryPath).where(col("ksid") =!= ksid),
-      registryPath)
+    val kept = s.read.parquet(registryPath).where(col("ksid") =!= ksid)
+    swapBuiltDir(s, registryPath)(tmp => kept.write.parquet(tmp))
   }
 
   /** Apply a tenant's retention to its slice of a points table

@@ -67,38 +67,26 @@ object Rollups {
     * streaming maintainer otherwise accretes one directory per
     * micro-batch forever), never a correctness event.
     *
-    * The whole deltas directory is replaced via the state-table
-    * write-then-rename contract (`_SUCCESS`-marked `.tmp` committed
-    * BEFORE the destination is deleted), so a crash at any point
-    * preserves a complete state and [[Keysets.repairSwap]] finishes an
-    * interrupted rename. Single-writer maintenance window by contract:
+    * The whole deltas directory is replaced via [[Keysets.swapBuiltDir]]
+    * (the committed `.tmp` lands BEFORE the destination is deleted), so
+    * a crash at any point preserves a complete state and
+    * [[Keysets.repairSwap]] finishes an interrupted rename. Single-writer maintenance window by contract:
     * the streaming appender repairs-then-appends, so it must not run
     * concurrently with compaction (same rule as every swap-managed
     * state table here). */
   def compactDeltas(s: SparkSession, deltasPath: String, keys: Seq[String]): Unit = {
     Keysets.repairSwap(s, deltasPath)
     val destP = new org.apache.hadoop.fs.Path(deltasPath)
-    val fs = destP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(destP)) return
+    if (!destP.getFileSystem(s.sparkContext.hadoopConfiguration).exists(destP)) return
     val merged = s.read.parquet(deltasPath)
       .groupBy((keys :+ "bucket_ms").map(col): _*)
       .agg(sum(col("psum")).as("psum"), sum(col("pcount")).as("pcount"),
         min(col("pmin")).as("pmin"), max(col("pmax")).as("pmax"))
-    val tmpP = new org.apache.hadoop.fs.Path(deltasPath + ".tmp")
-    if (fs.exists(tmpP) && !fs.delete(tmpP, true))
-      throw new java.io.IOException(s"could not clear stale $tmpP")
     // the staged write materializes while its source still exists; the
     // `batch=compacted` leaf keeps the appender's directory layout, so
     // post-compaction batches glob together with the folded state
-    merged.write.parquet(
-      new org.apache.hadoop.fs.Path(tmpP, "batch=compacted").toString)
-    fs.create(new org.apache.hadoop.fs.Path(tmpP, "_SUCCESS"), true).close()
-    if (!fs.delete(destP, true))
-      throw new java.io.IOException(s"could not delete $destP for swap")
-    if (!fs.rename(tmpP, destP))
-      throw new java.io.IOException(
-        s"rename $tmpP -> $destP failed; previous state preserved at $tmpP")
-    ()
+    Keysets.swapBuiltDir(s, deltasPath)(tmp =>
+      merged.write.parquet(s"$tmp/batch=compacted"))
   }
 
   /** Router: answer a downsample from the rollup when compatible, else

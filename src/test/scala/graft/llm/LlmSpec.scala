@@ -308,7 +308,7 @@ class LlmSpec extends SparkSpec {
       "same layout + same content must not rebuild")
     Retrieval.ensureTextIndex(spark, docs, "doc_id", "text", path,
       fp(Retrieval.TextLayoutVersion + ".next"))
-    assert(Retrieval.textIndexFingerprint(spark, path)
+    assert(graft.tsdb.Keysets.fingerprint(spark, path)
       .contains(fp(Retrieval.TextLayoutVersion + ".next")),
       "a layout-version bump with unchanged data must rebuild the artifact")
   }
@@ -691,8 +691,8 @@ class LlmSpec extends SparkSpec {
       p.fingerprint("t") +
         s"|${LlmQueries.contentTag(df, s"llmspec-fp-${System.nanoTime()}")}"
     Similarity.buildIvfIndex(spark, e1, path, fp(e1), p)
-    assert(Similarity.ivfIndexCurrent(spark, path, fp(e1)))
-    assert(!Similarity.ivfIndexCurrent(spark, path, fp(e2)),
+    assert(graft.tsdb.Keysets.fingerprint(spark, path).contains(fp(e1)))
+    assert(!graft.tsdb.Keysets.fingerprint(spark, path).contains(fp(e2)),
       "same-count content change must trigger a rebuild")
   }
 
@@ -767,7 +767,7 @@ class LlmSpec extends SparkSpec {
     assert(Similarity.deltaFraction(spark, path) == 0.0)
     assert(!Similarity.needsRetrain(spark, path))
     assert(Similarity.ivfDeltaCount(spark, path) == 0)
-    assert(Similarity.ivfIndexCurrent(spark, path, "retrained"))
+    assert(graft.tsdb.Keysets.fingerprint(spark, path).contains("retrained"))
     // the takedown became physical during the fold and must NOT be
     // resurrected by the rebuild
     assert(Similarity.readLists(spark, path)

@@ -143,6 +143,16 @@ class StreamSpec extends SparkSpec {
     assert(dirs.map(_.getName).toSeq == Seq("batch=compacted"),
       "landing dirs must fold into one")
     assert(contents() == before, "compaction must not change the points")
+    // crash between the swap's delete and rename: the committed state
+    // sits only at .tmp; the next compaction must recover it first
+    val fs = new org.apache.hadoop.fs.Path(points)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(points),
+      new org.apache.hadoop.fs.Path(points + ".tmp")))
+    Ingest.compactPoints(spark, points)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(points + ".tmp")),
+      "the committed .tmp must be renamed back, not left behind")
+    assert(contents() == before, "recovered compaction must not change the points")
     // the compacted layout prunes metric partitions at the scan
     val plan = spark.read.parquet(points)
       .where(col("metric") === "click")
@@ -476,7 +486,7 @@ class StreamSpec extends SparkSpec {
       "drift retrain must fold every delta")
     assert(Similarity.deltaFraction(spark, idx) == 0.0,
       "a retrained index reads zero drift")
-    assert(Similarity.indexFingerprint(spark, idx).get.contains("|retrained@"),
+    assert(graft.tsdb.Keysets.fingerprint(spark, idx).get.contains("|retrained@"),
       "the swapped artifact must carry the retrain tag")
     // the last retrain trained on every served vector, so the probe
     // must equal a fresh whole-corpus build bit-for-bit
@@ -490,10 +500,10 @@ class StreamSpec extends SparkSpec {
       "post-retrain probe must equal a fresh whole-corpus build")
     // restart on the same checkpoint: replays land nothing, so no
     // retrain re-fires (the carried txn record is what guards this)
-    val fpBefore = Similarity.indexFingerprint(spark, idx)
+    val fpBefore = graft.tsdb.Keysets.fingerprint(spark, idx)
     Ingest.maintainIvfIndex(spark, stream(), idx, cp,
       retrainOnDrift = true, retrainThreshold = 0.05)
-    assert(Similarity.indexFingerprint(spark, idx) == fpBefore,
+    assert(graft.tsdb.Keysets.fingerprint(spark, idx) == fpBefore,
       "a replayed stream must not trigger a redundant retrain")
     assert(Similarity.readLists(spark, idx).count() == emb.count())
   }

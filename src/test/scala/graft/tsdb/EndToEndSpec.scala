@@ -3,6 +3,7 @@ package graft.tsdb
 import graft.SparkSpec
 import graft.core.Tables
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** End-to-end storage fidelity: ingest events into the partitioned
   * layout (EP1'), query the store through the pipeline (EP2'), and get
@@ -114,7 +115,7 @@ class EndToEndSpec extends SparkSpec {
     val now = Tables.NowMs
     Keysets.create(spark, reg, "tenant_a", 1000L, 1, now)
     Keysets.create(spark, reg, "tenant_b", 2000L, 1, now)
-    // simulate a crash between swapInto's delete and rename: the committed
+    // simulate a crash between swapBuiltDir's delete and rename: the committed
     // state sits only at .tmp (with its _SUCCESS marker)
     val fs = new org.apache.hadoop.fs.Path(reg)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -143,5 +144,22 @@ class EndToEndSpec extends SparkSpec {
     torn.write("not parquet".getBytes); torn.close()
     Keysets.create(spark, reg2, "tenant_x", 1000L, 1, now)
     assert(Keysets.list(spark, reg2).count() == 1)
+  }
+
+  test("only Keysets opens, creates or commits files on the Hadoop FS") {
+    val io = """fs\.(create|open)\(|"_SUCCESS"""".r
+    val files = {
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try st.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally st.close()
+    }
+    val offenders = for {
+      f <- files
+      if !f.endsWith(java.nio.file.Paths.get("graft/tsdb/Keysets.scala"))
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if io.findFirstIn(line).isDefined
+    } yield s"$f:${i + 1}"
+    assert(offenders.isEmpty,
+      s"go through Keysets.swapBuiltDir / readMarker / writeMarker: $offenders")
   }
 }

@@ -48,6 +48,16 @@ class RollupSpec extends SparkSpec {
     assert(dirs.map(_.getName).toSeq == Seq("batch=compacted"),
       "three delta dirs must fold into one")
     assert(view() == before, "compaction must not change the rollup view")
+    // crash between the swap's delete and rename: the committed state
+    // sits only at .tmp; the next compaction must recover it first
+    val fs = new org.apache.hadoop.fs.Path(deltas)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(deltas),
+      new org.apache.hadoop.fs.Path(deltas + ".tmp")))
+    Rollups.compactDeltas(spark, deltas, keys)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(deltas + ".tmp")),
+      "the committed .tmp must be renamed back, not left behind")
+    assert(view() == before, "recovered compaction must not change the rollup view")
     // post-compaction appends glob together with the folded state
     Rollups.build(ev.where(col("user_id") === 1), keys, 60000L)
       .write.parquet(s"$deltas/batch=99")
