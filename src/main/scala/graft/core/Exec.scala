@@ -59,6 +59,19 @@ object Exec {
 
   private val warnedLocalCkpt = new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  /** Broadcast `df` only when a bounded count probe of `gate` (limit
+    * N+1 — it stops scanning past the threshold) says it holds at most
+    * `maxRows` rows; degrade to a shuffle-hash join otherwise. An
+    * unconditionally hinted broadcast would drive executors toward OOM
+    * on a corpus-sized frame (ADVICE r6/r7). One bounded Spark job per
+    * call; tight serving loops should gate on their known batch size. */
+  def gatedBroadcast(df: DataFrame, gate: DataFrame, maxRows: Long): DataFrame = {
+    val probe = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
+    if (gate.limit(probe).count() <= maxRows)
+      org.apache.spark.sql.functions.broadcast(df)
+    else df.hint("shuffle_hash")
+  }
+
   /** Force FULL-ROW evaluation of a query result. A bare `count()` lets
     * Catalyst prune every column — the projection being benchmarked is
     * never computed, so map-only queries (string functions, PII scrub,

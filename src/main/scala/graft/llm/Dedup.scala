@@ -73,10 +73,6 @@ object Dedup {
       s"(s, i) -> IF(s > 0L, shiftleft(1L, cast(i as int)), 0L)), 0L, (a, b) -> a + b)")
   }
 
-  /** Hamming distance between two simhash signatures. */
-  def hamming(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   /** Exact Jaccard similarity between two word-set columns (arrays). */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b)).cast("double")
@@ -206,17 +202,12 @@ object Dedup {
     * verifies the eval shingle count, and an oversized eval set falls
     * back to a shuffle hash join instead of OOMing the driver. */
   def decontaminate(train: DataFrame, ev: DataFrame,
-                    maxBroadcastRows: Long = 4000000L): DataFrame = {
-    val probe = math.min(maxBroadcastRows + 1, Int.MaxValue.toLong).toInt
-    val evSide =
-      if (ev.limit(probe).count() <= maxBroadcastRows) broadcast(ev)
-      else ev.hint("shuffle_hash")
-    train.join(evSide, "s")
+                    maxBroadcastRows: Long = 4000000L): DataFrame =
+    train.join(graft.core.Exec.gatedBroadcast(ev, ev, maxBroadcastRows), "s")
       .groupBy("doc_id")
       .agg(countDistinct(col("s")).as("n_shared"),
         countDistinct(col("eval_id")).as("n_eval_docs"))
       .orderBy("doc_id")
-  }
 
   def simhashPortable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     def nib(k: Int) = s"(instr('0123456789abcdef', substr(hx, $k, 1)) - 1)"
@@ -447,47 +438,17 @@ object Dedup {
     * O(batch) signature computation landed as an atomic delta dir —
     * band keys are per-doc independent, so base ∪ deltas is exactly
     * the index a full rebuild over the grown corpus would produce
-    * (asserted in LlmSpec). */
-  def appendBandDelta(s: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
-                      idCol: String, textCol: String, path: String,
-                      k: Int = 32, r: Int = 4, shingleN: Int = 3): Unit = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val sigs = bandSigsPortable(newDocs, idCol, textCol, k, r, shingleN)
-    graft.tsdb.Keysets.appendDelta(s, path, "bands")(tmp => sigs.write.parquet(tmp))
-  }
-
-  /** Exactly-once streaming append: lands the batch's signatures as
-    * the next auto-id delta UNLESS `streamId` already committed
-    * `batchId` (the Delta Lake txn pattern — see
-    * [[graft.tsdb.Keysets.appendDeltaTxn]]); auto-allocated ids mean a
+    * (asserted in LlmSpec). With `txn = Some((streamId, batchId))` the
+    * batch lands exactly once (the Delta Lake txn pattern of
+    * [[graft.tsdb.Keysets.appendDelta]]); auto-allocated ids mean a
     * replayed batch can never overwrite a takedown tombstone or any
     * other writer's delta. Returns whether anything landed. */
-  def appendBandDeltaTxn(s: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
-                         idCol: String, textCol: String, path: String,
-                         streamId: String, batchId: Long, k: Int = 32,
-                         r: Int = 4, shingleN: Int = 3): Boolean = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val sigs = bandSigsPortable(newDocs, idCol, textCol, k, r, shingleN)
-    graft.tsdb.Keysets.appendDeltaTxn(s, path, "bands", streamId, batchId)(
-      tmp => sigs.write.parquet(tmp))
-  }
-
-  /** Bootstrap for a stream-grown index: an empty schema-bearing base
-    * table (the corpus then accumulates purely as micro-batch deltas
-    * until [[compactBandDeltas]] folds it). repartition(1) forces one
-    * write task — a zero-task empty write would land a schema-less dir
-    * no reader can open. No-op when the base already exists. */
-  def ensureEmptyBandBase(s: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    graft.tsdb.Keysets.repairSwap(s, s"$path/bands")
-    val base = new org.apache.hadoop.fs.Path(s"$path/bands")
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) return
-    import s.implicits._
-    val empty = bandSigsPortable(
-      Seq.empty[(Long, String)].toDF("id", "text"), "id", "text", 32, 4, 3)
-    graft.tsdb.Keysets.swapBuiltDir(s, s"$path/bands")(
-      tmp => empty.repartition(1).write.parquet(tmp))
-  }
+  def appendBandDelta(s: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
+                      idCol: String, textCol: String, path: String,
+                      k: Int = 32, r: Int = 4, shingleN: Int = 3,
+                      txn: Option[(String, Long)] = None): Boolean =
+    graft.tsdb.Keysets.appendDelta(s, path, "bands", txn)(tmp =>
+      bandSigsPortable(newDocs, idCol, textCol, k, r, shingleN).write.parquet(tmp))
 
   /** Tombstone-delete docs from the stored band index — the takedown
     * shape, mirroring [[graft.llm.Similarity.deleteFromIvfIndex]]: the
@@ -497,7 +458,6 @@ object Dedup {
     * physically. Doc ids must never be reused. */
   def deleteFromBandIndex(s: org.apache.spark.sql.SparkSession, ids: DataFrame,
                           path: String): Unit = {
-    graft.tsdb.Keysets.repairSwap(s, path)
     val doomed = ids.toDF("id").select(col("id"), lit(true).as("tomb"))
     if (doomed.isEmpty) return // an empty write would land a schema-less dir
     graft.tsdb.Keysets.appendDelta(s, path, "bands")(tmp => doomed.write.parquet(tmp))
@@ -508,12 +468,8 @@ object Dedup {
     * Tombstones are applied during the fold — deferred deletes become
     * physical here. */
   def compactBandDeltas(s: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.tsdb.Keysets.compactDeltas(s, path, "bands") { (merged, tmp) =>
-      val live = graft.tsdb.Keysets.dropTombstoned(merged, "id")
-      // fully-tombstoned → still land a schema-bearing (empty) base:
-      // an empty frame can plan zero tasks and write zero files
-      if (live.isEmpty) live.repartition(1).write.parquet(tmp)
-      else live.write.parquet(tmp)
+    graft.tsdb.Keysets.compactDeltas(s, path, "bands", "id") { (live, tmp) =>
+      graft.tsdb.Keysets.writeTable(live, tmp)(_.write)
     }
 
   def bandDeltaCount(s: org.apache.spark.sql.SparkSession, path: String): Int =
@@ -533,16 +489,12 @@ object Dedup {
                           k: Int = 32, r: Int = 4, shingleN: Int = 3,
                           threshold: Double = 0.5,
                           maxBroadcastSigs: Long = 4000000L): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
     val idx = readBandIndex(s, path)
     val batchSigs = bandSigsPortable(batch, idCol, textCol, k, r, shingleN)
       .select(col("band"), col("sig"), col("id").as("new_id"))
-    val probe = math.min(maxBroadcastSigs + 1, Int.MaxValue.toLong).toInt
-    val batchSide =
-      if (batchSigs.limit(probe).count() <= maxBroadcastSigs) broadcast(batchSigs)
-      else batchSigs.hint("shuffle_hash")
     val cand = idx.select(col("band"), col("sig"), col("id").as("corpus_id"))
-      .join(batchSide, Seq("band", "sig"))
+      .join(graft.core.Exec.gatedBroadcast(batchSigs, batchSigs, maxBroadcastSigs),
+        Seq("band", "sig"))
       .select("corpus_id", "new_id").distinct()
     val wsets = allDocs.select(col(idCol).as("id"),
       array_distinct(words(col(textCol))).as("ws"))

@@ -156,8 +156,8 @@ object Retrieval {
     * append-side tokenizer would silently corrupt df/tf). Stats carry
     * exact-integer sums (n_docs, sum_dl) so batches COMBINE exactly:
     * Σ over stats rows ≡ the stats of one whole-corpus build. */
-  private def postingRows(docs: DataFrame, idCol: String, textCol: String,
-                          buckets: Int): (DataFrame, DataFrame) = {
+  private[graft] def postingRows(docs: DataFrame, idCol: String, textCol: String,
+                                 buckets: Int): (DataFrame, DataFrame) = {
     val ws = docs
       .withColumn("ws", filter(Dedup.words(col(textCol)), w => w =!= lit("")))
       .withColumn("dl", size(col("ws")).cast("double"))
@@ -197,22 +197,29 @@ object Retrieval {
     }
   }
 
-  /** Stats rows of the base index plus every committed delta (each root
-    * read explicitly — `_stats` is hidden from data discovery). Roots
-    * with no `_stats` table are skipped: tombstone deltas carry only
-    * marker rows, and corpus stats deliberately keep counting deleted
-    * docs until compaction recomputes them. */
+  /** Corpus stats (N, avgdl, bucket modulus) = Σ over the stats rows of
+    * the base index plus every committed delta (each root read
+    * explicitly — `_stats` is hidden from data discovery): integer-exact
+    * sums, so the combined avgdl is bit-identical to a whole-corpus
+    * build's; a bootstrap-empty base contributes n=0 / null sum_dl.
+    * Roots with no `_stats` table are skipped: tombstone deltas carry
+    * only marker rows, and corpus stats deliberately keep counting
+    * deleted docs until compaction recomputes them. */
   private def readTextStats(s: org.apache.spark.sql.SparkSession,
-                            path: String): Seq[org.apache.spark.sql.Row] = {
-    graft.tsdb.Keysets.repairSwap(s, s"$path/postings")
+                            path: String): (Double, Double, Int) = {
     val roots = s"$path/postings/_stats" +:
       graft.tsdb.Keysets.deltaDirs(s, path, "postings")
         .map(d => s"$d/postings/_stats")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    roots.filter(r => fs.exists(new org.apache.hadoop.fs.Path(r)))
+    val rows = roots.filter(r => fs.exists(new org.apache.hadoop.fs.Path(r)))
       .map(r => s.read.parquet(r))
       .reduce(_.unionByName(_)).collect().toIndexedSeq
+    val n = rows.map(_.getAs[Double]("n_docs")).sum
+    val avgdl = rows.map(r =>
+      if (r.isNullAt(r.fieldIndex("sum_dl"))) 0.0
+      else r.getAs[Double]("sum_dl")).sum / n
+    (n, avgdl, rows.head.getAs[Int]("buckets"))
   }
 
   /** Visible (un-folded) delta dirs of the text index — the
@@ -232,56 +239,23 @@ object Retrieval {
     * the batch's stats in the same swap — the Keysets delta contract).
     * df needs no maintenance (it is derived at probe time), and corpus
     * stats combine exactly because they are stored as integer-exact
-    * sums. Doc ids must be new — the index never rewrites on append. */
-  def appendTextDelta(s: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
-                      idCol: String, textCol: String, path: String): Unit = {
-    val buckets = readTextStats(s, path).head.getAs[Int]("buckets")
-    val (postings, stats) = postingRows(newDocs, idCol, textCol, buckets)
-    graft.tsdb.Keysets.appendDelta(s, path, "postings") { tmp =>
-      postings.write.partitionBy("tb").parquet(tmp)
-      stats.coalesce(1).write.parquet(s"$tmp/_stats")
-    }
-  }
-
-  /** Exactly-once streaming append — [[appendTextDelta]] under the
-    * Keysets txn watermark (the Delta Lake txnAppId pattern shared
-    * with the band and IVF sinks): a replayed micro-batch lands
-    * NOTHING, and auto-allocated delta ids mean a replay can never
+    * sums. Doc ids must be new — the index never rewrites on append.
+    * With `txn = Some((streamId, batchId))` the batch lands exactly
+    * once (the Delta Lake txn pattern of
+    * [[graft.tsdb.Keysets.appendDelta]], shared with the band and IVF
+    * sinks); auto-allocated delta ids mean a replay can never
     * overwrite a takedown tombstone or any other writer's delta.
     * Returns whether anything landed. */
-  def appendTextDeltaTxn(s: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
-                         idCol: String, textCol: String, path: String,
-                         streamId: String, batchId: Long): Boolean = {
-    val buckets = readTextStats(s, path).head.getAs[Int]("buckets")
-    val (postings, stats) = postingRows(newDocs, idCol, textCol, buckets)
-    graft.tsdb.Keysets.appendDeltaTxn(s, path, "postings", streamId, batchId) { tmp =>
+  def appendTextDelta(s: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
+                      idCol: String, textCol: String, path: String,
+                      txn: Option[(String, Long)] = None): Boolean =
+    // stats read inside the callback: a replay-skip costs zero jobs
+    graft.tsdb.Keysets.appendDelta(s, path, "postings", txn) { tmp =>
+      val buckets = readTextStats(s, path)._3
+      val (postings, stats) = postingRows(newDocs, idCol, textCol, buckets)
       postings.write.partitionBy("tb").parquet(tmp)
       stats.coalesce(1).write.parquet(s"$tmp/_stats")
     }
-  }
-
-  /** Bootstrap for a stream-grown text index: an empty schema-bearing
-    * postings base plus a zero-stats row pinning the bucket modulus
-    * (the corpus then accumulates purely as micro-batch deltas until
-    * [[compactTextDeltas]] folds it). The empty base is written
-    * UN-partitioned with one forced task — a zero-row partitionBy
-    * write lands a schema-less dir no reader can open; `tb` rides as a
-    * data column, which unions by name with the partitioned deltas and
-    * still bucket-prunes them. No-op when the base already exists. */
-  def ensureEmptyTextBase(s: org.apache.spark.sql.SparkSession, path: String,
-                          buckets: Int = 16): Unit = {
-    graft.tsdb.Keysets.repairSwap(s, s"$path/postings")
-    val base = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(base)) return
-    import s.implicits._
-    val (postings, stats) = postingRows(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text", buckets)
-    graft.tsdb.Keysets.swapBuiltDir(s, s"$path/postings") { tmp =>
-      postings.repartition(1).write.parquet(tmp)
-      stats.coalesce(1).write.parquet(s"$tmp/_stats")
-    }
-  }
 
   /** Tombstone-delete documents WITHOUT rewriting postings — the
     * takedown shape, same contract as the ANN index: the markers land
@@ -313,14 +287,10 @@ object Retrieval {
     * watermark keeps late-listed delta dirs from replaying). */
   def compactTextDeltas(s: org.apache.spark.sql.SparkSession,
                         path: String): Unit = {
-    val buckets = readTextStats(s, path).head.getAs[Int]("buckets")
-    graft.tsdb.Keysets.compactDeltas(s, path, "postings") { (merged, tmp) =>
-      val live = graft.core.Exec.materialize(
-        graft.tsdb.Keysets.dropTombstoned(merged, "doc_id"))
-      // fully-tombstoned → still land a schema-bearing (empty) base:
-      // a zero-row partitionBy write plans no tasks and no files
-      if (live.isEmpty) live.repartition(1).write.parquet(tmp)
-      else live.write.partitionBy("tb").parquet(tmp)
+    val buckets = readTextStats(s, path)._3
+    graft.tsdb.Keysets.compactDeltas(s, path, "postings", "doc_id") { (rows, tmp) =>
+      val live = graft.core.Exec.materialize(rows)
+      graft.tsdb.Keysets.writeTable(live, tmp)(_.write.partitionBy("tb"))
       live.select("doc_id", "dl").distinct()
         .agg(count(lit(1)).cast("double").as("n_docs"), sum(col("dl")).as("sum_dl"))
         .withColumn("buckets", lit(buckets))
@@ -367,16 +337,7 @@ object Retrieval {
   private def storedProbe(s: org.apache.spark.sql.SparkSession, path: String,
                           terms: Seq[String]): (DataFrame, Double, Double) = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    graft.tsdb.Keysets.repairSwap(s, path)
-    // corpus stats = Σ over base + delta stats rows (integer-exact
-    // sums, so the combined avgdl is bit-identical to a whole-corpus
-    // build's); a bootstrap-empty base contributes n=0 / null sum_dl
-    val statRows = readTextStats(s, path)
-    val n = statRows.map(_.getAs[Double]("n_docs")).sum
-    val avgdl = statRows.map(r =>
-      if (r.isNullAt(r.fieldIndex("sum_dl"))) 0.0
-      else r.getAs[Double]("sum_dl")).sum / n
-    val nBuckets = statRows.head.getAs[Int]("buckets")
+    val (n, avgdl, nBuckets) = readTextStats(s, path)
     // bucket ids via the engine's own hash (a terms-sized local job —
     // a driver-side reimplementation of xxhash64 could silently drift)
     import s.implicits._
@@ -526,12 +487,7 @@ object Retrieval {
     * proves the artifact's bookkeeping, not just its probe path. */
   def textIndexStats(s: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val statRows = readTextStats(s, path)
-    val n = statRows.map(_.getAs[Double]("n_docs")).sum
-    val avgdl = statRows.map(r =>
-      if (r.isNullAt(r.fieldIndex("sum_dl"))) 0.0
-      else r.getAs[Double]("sum_dl")).sum / n
+    val (n, avgdl, _) = readTextStats(s, path)
     graft.tsdb.Keysets.dropTombstoned(
         graft.tsdb.Keysets.readWithDeltas(s, path, "postings"), "doc_id")
       .agg(count_distinct(col("term")).as("n_terms"),

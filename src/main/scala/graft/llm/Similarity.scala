@@ -45,11 +45,6 @@ object Similarity {
   def cosineFrom(dot: Column, na: Column, nb: Column): Column =
     graft.core.D.r4s(dot / (na * nb))
 
-  /** cosine = dot / (|a| * |b|), rounded 4dp (self-contained form; prefer
-    * precomputed norms in joins). */
-  def cosineExpr(a: String, b: String): Column =
-    cosineFrom(dotExpr(a, b), normExpr(a), normExpr(b))
-
   /** Brute-force top-k cosine neighbors of one query vector. */
   def cosineTopK(vectors: DataFrame, queryVec: DataFrame, k: Int): DataFrame = {
     val q = queryVec.withColumn("qnrm", normExpr("qv"))
@@ -739,28 +734,12 @@ object Similarity {
     probeJoinTopK(assigned, queries, cs, k, nprobe, maxBroadcastQueries)
   }
 
-  /** Broadcast `df` only when a bounded count probe of `gate` says it
-    * holds at most `maxRows` rows; degrade to a shuffle-hash join
-    * otherwise. The ONE gating helper every probe/batch broadcast here
-    * goes through (limit-N+1 probe, same pattern as
-    * Dedup.decontaminate) — an unconditionally hinted broadcast would
-    * drive executors toward OOM on a corpus-sized frame instead of
-    * degrading to a shuffle (ADVICE r6/r7). Costs one bounded Spark
-    * job per call; serving paths that probe in a tight loop should
-    * pass their own known batch size as the gate frame's limit. */
-  private def gatedBroadcast(df: DataFrame, gate: DataFrame,
-                             maxRows: Long): DataFrame = {
-    val probe = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-    if (gate.limit(probe).count() <= maxRows) broadcast(df)
-    else df.hint("shuffle_hash")
-  }
-
   /** Probe side of the batched IVF search, shared by the inline
     * ([[ivfTopKBatch]]) and stored-index ([[ivfTopKStored]]) paths:
     * map-side nprobe pick against the k centroid literals, join the
     * pre-assigned corpus on centroid_id, per-query top-k window. The
     * broadcast of the exploded probe set is GATED on a bounded count of
-    * the query frame — see [[gatedBroadcast]]. */
+    * the query frame — see [[graft.core.Exec.gatedBroadcast]]. */
   /** Shared probe-join stage: nprobe pick + lists join + cosine — the
     * scored candidate frame (query_id, vec_id, sim) both the top-k and
     * the radius consumers rank/filter. */
@@ -783,7 +762,7 @@ object Similarity {
       .select(col("query_id"), col("qv"),
         col("p").getField("centroid_id").as("centroid_id"))
       .withColumn("qnrm", normExpr("qv"))
-    val probeSide = gatedBroadcast(probes, queries, maxBroadcastQueries)
+    val probeSide = graft.core.Exec.gatedBroadcast(probes, queries, maxBroadcastQueries)
     val joined = assigned.join(probeSide, Seq("centroid_id"))
     // stored-index corpora carry a precomputed norm column; inline
     // corpora pay the Dot4 only on candidates surviving the probe join
@@ -941,6 +920,12 @@ object Similarity {
     } finally { lists.unpersist(); () }
   }
 
+  /** The stored quantizer's centroids as driver literals (one k-row
+    * read), after Keysets finishes any interrupted swap of the index. */
+  private def storedCentroids(s: SparkSession,
+                              path: String): Array[(Int, Seq[Float], Double)] =
+    collectCentroids(graft.tsdb.Keysets.readTable(s, path, "centroids"))
+
   /** A count marker [[buildIvfIndex]] pins with the artifact (every
     * `ivf-v2` index carries `_trained` and `lists/_appended`). */
   private def longMarker(s: SparkSession, path: String): Long = {
@@ -966,8 +951,7 @@ object Similarity {
   def ivfTopKStored(s: SparkSession, queries: DataFrame, path: String,
                     k: Int, nprobe: Int,
                     maxBroadcastQueries: Long = 50000L): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val cs = collectCentroids(s.read.parquet(s"$path/centroids"))
+    val cs = storedCentroids(s, path)
     probeJoinTopK(readLists(s, path), queries, cs, k, nprobe, maxBroadcastQueries)
   }
 
@@ -983,8 +967,7 @@ object Similarity {
   def ivfRadiusStored(s: SparkSession, queries: DataFrame, path: String,
                       minSim: Double, nprobe: Int,
                       maxBroadcastQueries: Long = 50000L): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val cs = collectCentroids(s.read.parquet(s"$path/centroids"))
+    val cs = storedCentroids(s, path)
     probeScored(readLists(s, path), queries, cs, nprobe, maxBroadcastQueries,
       excludeSelf = false)
       .where(col("sim") >= minSim)
@@ -1003,8 +986,7 @@ object Similarity {
     * (query_id, rn, neighbor_id, sim). */
   def ivfKnnJoinStored(s: SparkSession, path: String, k: Int, nprobe: Int,
                        maxBroadcastQueries: Long = 50000L): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val cs = collectCentroids(s.read.parquet(s"$path/centroids"))
+    val cs = storedCentroids(s, path)
     val lists = readLists(s, path)
     val queries = lists.select(col("vec_id").as("query_id"),
       col("embedding").as("qv"))
@@ -1030,8 +1012,7 @@ object Similarity {
   def ivfTopKStoredFiltered(s: SparkSession, queries: DataFrame, path: String,
                             pred: Column, k: Int, nprobe: Int,
                             maxBroadcastQueries: Long = 50000L): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val cs = collectCentroids(s.read.parquet(s"$path/centroids"))
+    val cs = storedCentroids(s, path)
     probeJoinTopK(readLists(s, path).where(pred), queries, cs, k, nprobe,
       maxBroadcastQueries)
   }
@@ -1047,7 +1028,7 @@ object Similarity {
   // AUTO-ALLOCATE, so a replayed plain [[appendIvfDelta]] lands a
   // DUPLICATE delta (double-counted vectors) — it is NOT
   // replay-idempotent; callers that can replay (streaming sinks,
-  // retried jobs) must go through [[appendIvfDeltaTxn]]. Readers union
+  // retried jobs) must pass its `txn` (stream id, batch id). Readers union
   // lists + deltas; the same partition layout keeps every probe's
   // partition pruning. The quantizer drifts as the corpus grows — the
   // standard IVF trade — until the next full [[buildIvfIndex]] folds
@@ -1082,23 +1063,23 @@ object Similarity {
     * (see LlmSpec's measured recall-vs-appended-mass point and
     * PERF.md). */
   def deltaFraction(s: SparkSession, path: String): Double = {
-    graft.tsdb.Keysets.repairSwap(s, path)
+    // appendedMass first: its delta listing repairs the index
+    val appended = appendedMass(s, path)
     val trained = longMarker(s, s"$path/_trained")
     require(trained > 0, s"deltaFraction: empty trained base at $path")
-    appendedMass(s, path).toDouble / trained.toDouble
+    appended.toDouble / trained.toDouble
   }
 
   /** Cumulative appended (quantizer-untrained) rows: folded marker +
     * live rows of visible deltas. */
   private def appendedMass(s: SparkSession, path: String): Long = {
-    graft.tsdb.Keysets.repairSwap(s, s"$path/lists")
-    val foldedIn = longMarker(s, s"$path/lists/_appended")
+    // listed first: the listing repairs the index before the marker read
     val visible = graft.tsdb.Keysets.deltaDirs(s, path, "lists").map { d =>
       val df = s.read.parquet(s"$d/lists")
       if (df.columns.contains("tomb")) df.where(col("tomb").isNull).count()
       else df.count()
     }.sum
-    foldedIn + visible
+    longMarker(s, s"$path/lists/_appended") + visible
   }
 
   /** Default retrain trigger: 30% untrained mass. The measured curve
@@ -1140,10 +1121,9 @@ object Similarity {
   def retrainIvfIndex(s: SparkSession, path: String, fingerprint: String,
                       p: IndexParams = IndexParams()): Unit = {
     compactIvfDeltas(s, path)
-    graft.tsdb.Keysets.repairSwap(s, s"$path/lists")
+    val served = graft.tsdb.Keysets.readTable(s, path, "lists")
     val carried = Seq("_txn", "_folded")
       .flatMap(n => graft.tsdb.Keysets.readMarker(s, s"$path/lists/$n").map(n -> _)).toMap
-    val served = s.read.parquet(s"$path/lists")
     // the served rows stripped back to input columns — nrm, codes and
     // the assignment are all functions of the quantizer being replaced
     val corpus = served.select(served.columns.toIndexedSeq.filterNot(c =>
@@ -1193,8 +1173,7 @@ object Similarity {
     * codes whenever it disagreed with what the index was built with. */
   private def deltaRows(s: SparkSession, newVectors: DataFrame,
                         path: String): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val cs = collectCentroids(s.read.parquet(s"$path/centroids"))
+    val cs = storedCentroids(s, path)
     val perSub = readPqCodebooks(s, path)
     val dim = perSub.map(_.head._2.size).sum // Σ subspace widths
     assignNearest(newVectors, cs)
@@ -1204,26 +1183,24 @@ object Similarity {
         ++ pqCodeCols(perSub, dim): _*)
   }
 
-  /** Append `newVectors` as the next delta (see [[deltaRows]]). */
-  def appendIvfDelta(s: SparkSession, newVectors: DataFrame, path: String): Unit = {
-    val rows = deltaRows(s, newVectors, path)
-    graft.tsdb.Keysets.appendDelta(s, path, "lists")(
-      tmp => rows.repartition(col("centroid_id"))
-        .write.partitionBy("centroid_id").parquet(tmp))
-  }
+  /** The lists' on-disk layout, shared by every delta and fold: one
+    * directory per centroid_id (a probe prunes to its nprobe lists),
+    * clustered first so each list lands from one write task. */
+  private def byList(df: DataFrame) =
+    df.repartition(col("centroid_id")).write.partitionBy("centroid_id")
 
-  /** Exactly-once streaming append — the Delta Lake txn pattern (see
-    * [[graft.tsdb.Keysets.appendDeltaTxn]]): skipped when `streamId`
-    * already committed `batchId`; auto-allocated delta ids mean a
-    * replayed batch can never overwrite a takedown tombstone or any
-    * other writer's delta. Returns whether anything landed. */
-  def appendIvfDeltaTxn(s: SparkSession, newVectors: DataFrame, path: String,
-                        streamId: String, batchId: Long): Boolean =
+  /** Append `newVectors` as the next delta (see [[deltaRows]]); with
+    * `txn = Some((streamId, batchId))` exactly once, the Delta Lake txn
+    * pattern of [[graft.tsdb.Keysets.appendDelta]]: skipped when
+    * `streamId` already committed `batchId`, and auto-allocated delta
+    * ids mean a replayed batch can never overwrite a takedown
+    * tombstone or any other writer's delta. Returns whether anything
+    * landed. */
+  def appendIvfDelta(s: SparkSession, newVectors: DataFrame, path: String,
+                     txn: Option[(String, Long)] = None): Boolean =
     // payload built inside the callback: a replay-skip costs zero jobs
-    graft.tsdb.Keysets.appendDeltaTxn(s, path, "lists", streamId, batchId)(
-      tmp => deltaRows(s, newVectors, path)
-        .repartition(col("centroid_id"))
-        .write.partitionBy("centroid_id").parquet(tmp))
+    graft.tsdb.Keysets.appendDelta(s, path, "lists", txn)(
+      tmp => byList(deltaRows(s, newVectors, path)).parquet(tmp))
 
   /** Tombstone-delete vectors from the stored index WITHOUT rewriting
     * the lists — the takedown / right-to-be-forgotten shape. The
@@ -1248,9 +1225,7 @@ object Similarity {
       // already-deleted / never-indexed ids leave nothing to shadow —
       // and an empty partitioned write would land a schema-less dir
       if (doomed.isEmpty) return
-      graft.tsdb.Keysets.appendDelta(s, path, "lists")(
-        tmp => doomed.repartition(col("centroid_id"))
-          .write.partitionBy("centroid_id").parquet(tmp))
+      graft.tsdb.Keysets.appendDelta(s, path, "lists")(tmp => byList(doomed).parquet(tmp))
     } finally { doomed.unpersist(); () }
   }
 
@@ -1267,14 +1242,8 @@ object Similarity {
     // so [[deltaFraction]] reads the same drift after the fold as
     // before it
     val appended = appendedMass(s, path)
-    graft.tsdb.Keysets.compactDeltas(s, path, "lists") { (merged, tmp) =>
-      val live = graft.tsdb.Keysets.dropTombstoned(merged, "vec_id")
-      // a fully-tombstoned corpus must still land a schema-bearing
-      // base: an empty dynamic-partition write creates zero files and
-      // every later read would fail on schema inference
-      if (live.isEmpty) live.repartition(1).write.parquet(tmp)
-      else live.repartition(col("centroid_id"))
-        .write.partitionBy("centroid_id").parquet(tmp)
+    graft.tsdb.Keysets.compactDeltas(s, path, "lists", "vec_id") { (live, tmp) =>
+      graft.tsdb.Keysets.writeTable(live, tmp)(byList)
       graft.tsdb.Keysets.writeMarker(s, s"$tmp/_appended", appended.toString)
     }
   }
@@ -1291,13 +1260,12 @@ object Similarity {
   def nearDupsAgainstIndex(s: SparkSession, batch: DataFrame, path: String,
                            threshold: Double,
                            maxBroadcastRows: Long = 1000000L): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val cs = collectCentroids(s.read.parquet(s"$path/centroids"))
+    val cs = storedCentroids(s, path)
     val nb = assignNearest(batch, cs)
       .withColumn("a_nrm", normExpr("embedding"))
       .select(col("centroid_id"), col("vec_id").as("new_id"),
         col("embedding").as("av"), col("a_nrm"))
-    val batchSide = gatedBroadcast(nb, nb, maxBroadcastRows)
+    val batchSide = graft.core.Exec.gatedBroadcast(nb, nb, maxBroadcastRows)
     readLists(s, path)
       .select(col("centroid_id"), col("vec_id").as("corpus_id"),
         col("embedding").as("bv"), col("nrm").as("b_nrm"))
@@ -1314,7 +1282,6 @@ object Similarity {
     * shuffle at query time. Result ≡ [[pqTopK]] with the same params. */
   def pqTopKStored(s: SparkSession, queryVec: DataFrame, path: String,
                    dim: Int, topK: Int): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
     val perSub = readPqCodebooks(s, path)
     val m = perSub.size
     val encoded = readLists(s, path)
@@ -1327,7 +1294,7 @@ object Similarity {
     * [[collectCentroids]] (the ADC chained-CASE grows O(m·k)). */
   private def readPqCodebooks(s: SparkSession,
                               path: String): Seq[Array[(Int, Seq[Float], Double)]] = {
-    val rows = s.read.parquet(s"$path/codebooks")
+    val rows = graft.tsdb.Keysets.readTable(s, path, "codebooks")
       .select(col("sub"), col("centroid_id"), col("cvec"),
         dotExpr("cvec", "cvec").as("sq_c"))
       .collect()
@@ -1365,8 +1332,7 @@ object Similarity {
   private def ivfPqStored(s: SparkSession, queryVec: DataFrame, path: String,
                           pred: Option[Column], dim: Int, topK: Int, nprobe: Int,
                           maxBroadcastQueries: Long): DataFrame = {
-    graft.tsdb.Keysets.repairSwap(s, path)
-    val cs = collectCentroids(s.read.parquet(s"$path/centroids"))
+    val cs = storedCentroids(s, path)
     val perSub = readPqCodebooks(s, path)
     val m = perSub.size
     val dists = cs.map { case (cid, cvec, sqc) =>
@@ -1385,7 +1351,7 @@ object Similarity {
         +: (0 until m).map(i => col(s"code_$i")): _*)
     // same count-gated broadcast as every other probe join here — a
     // corpus-sized queryVec must degrade to a shuffle, not OOM (ADVICE r7)
-    lists.join(gatedBroadcast(probes, queryVec, maxBroadcastQueries),
+    lists.join(graft.core.Exec.gatedBroadcast(probes, queryVec, maxBroadcastQueries),
         Seq("centroid_id"))
       .select(col("vec_id"),
         graft.core.D.r4s(pqScoreCol(perSub, dim)).as("score"))

@@ -82,6 +82,19 @@ object Ingest {
     df
   }
 
+  /** THE foreachBatch stream runner of every sink below: append mode,
+    * `checkpoint` as the WAL, AvailableNow (drain what has arrived,
+    * then stop), `f` per micro-batch; returns once the stream ends. */
+  private def runBatches(stream: DataFrame, checkpoint: String)
+                        (f: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(f)
+      .start()
+      .awaitTermination()
+
   /** The file SOURCE itself, promoted into the driver gate (r12): run
     * the events fixture through the streaming file source in append
     * mode with NO transformation beyond the shared ts derivation, and
@@ -362,11 +375,11 @@ object Ingest {
       col("event_type").as("metric"),
       map(lit("user"), col("user_id").cast("string")).as("tags"),
       col("ts_ms"), col("value"))
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$outBase/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    // phase receipt (VERDICT r17 #6): the stream lifecycle — every
+    // micro-batch's landing write + catalog upsert — as its own TSV row,
+    // so a drifted driver reading splits into sink vs final-read cost
+    graft.core.Phase.time("sink_stream") {
+      runBatches(stream, s"$outBase/_checkpoint") { (batch, batchId) =>
         // try/finally: a throw from the merge/swap must not leak the
         // cached datasets into the rest of the session (Verify keeps
         // running other queries after a failed one)
@@ -383,13 +396,8 @@ object Ingest {
           graft.tsdb.Catalog.upsertCatalog(batch.sparkSession,
             graft.tsdb.Catalog.fromPoints(batch), catalogPath)
         } finally { batch.unpersist(); () }
-        ()
       }
-      .start()
-    // phase receipt (VERDICT r17 #6): the stream lifecycle — every
-    // micro-batch's landing write + catalog upsert — as its own TSV row,
-    // so a drifted driver reading splits into sink vs final-read cost
-    graft.core.Phase.time("sink_stream") { q.awaitTermination() }
+    }
     graft.tsdb.Catalog.readCatalog(s, catalogPath)
       .getOrElse(throw new IllegalStateException(
         s"ingest produced no catalog under $catalogPath"))
@@ -419,18 +427,14 @@ object Ingest {
     val day = 86400000L
     val split = graft.core.Tables.NowMs - 7 * day
     val hotPath = s"$outBase/hot"
-    val q = eventsStream(s, dir)
+    val recent = eventsStream(s, dir)
       .where(col("ts_ms") >= split - day)
       .select(col("event_type"), col("user_id"), col("ts_ms"), col("value"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$outBase/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$hotPath/batch=$batchId"); ()
+    graft.core.Phase.time("hot_land") {
+      runBatches(recent, s"$outBase/_checkpoint") { (batch, batchId) =>
+        batch.write.mode("overwrite").parquet(s"$hotPath/batch=$batchId")
       }
-      .start()
-    graft.core.Phase.time("hot_land") { q.awaitTermination() }
+    }
     val hot = s.read.parquet(hotPath)
       .select(col("event_type"), col("user_id"), col("ts_ms"), col("value"))
       .withColumn("tier", lit(1))
@@ -460,23 +464,16 @@ object Ingest {
     import org.apache.spark.sql.functions._
     val deltas = s"$outBase/rollup_deltas"
     val keys = Seq("event_type", "user_id")
-    val q = eventsStream(s, dir)
+    val events = eventsStream(s, dir)
       .select(col("event_type"), col("user_id"), col("ts_ms"), col("value"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$outBase/_rollup_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // repair first: a crash inside compactDeltas' swap would
-        // otherwise let this append recreate the directory and orphan
-        // the committed compacted state in `.tmp`
-        graft.tsdb.Keysets.repairSwap(batch.sparkSession, deltas)
-        graft.tsdb.Rollups.build(batch, keys, intervalMs)
-          .write.mode("overwrite").parquet(s"$deltas/batch=$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    runBatches(events, s"$outBase/_rollup_checkpoint") { (batch, batchId) =>
+      // repair first: a crash inside compactDeltas' swap would
+      // otherwise let this append recreate the directory and orphan
+      // the committed compacted state in `.tmp`
+      graft.tsdb.Keysets.repairSwap(batch.sparkSession, deltas)
+      graft.tsdb.Rollups.build(batch, keys, intervalMs)
+        .write.mode("overwrite").parquet(s"$deltas/batch=$batchId")
+    }
     graft.tsdb.Keysets.repairSwap(s, deltas)
     s.read.parquet(deltas)
       .groupBy((keys :+ "bucket_ms").map(col): _*)
@@ -503,33 +500,18 @@ object Ingest {
   def maintainBandIndex(s: SparkSession, docsStream: DataFrame,
                         indexPath: String, checkpoint: String,
                         idCol: String = "doc_id", textCol: String = "text",
-                        k: Int = 32, r: Int = 4, shingleN: Int = 3,
-                        maxDeltasBeforeCompact: Int = Int.MaxValue): Unit = {
-    graft.llm.Dedup.ensureEmptyBandBase(s, indexPath)
-    val q = docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // band params must match what probes of this artifact use —
-        // they ride the sink signature because the band index (unlike
-        // the IVF quantizer) stores no geometry to derive them from
-        val landed = graft.llm.Dedup.appendBandDeltaTxn(batch.sparkSession, batch,
-          idCol, textCol, indexPath, streamId = checkpoint, batchId = batchId,
-          k = k, r = r, shingleN = shingleN)
-        // inline maintenance: fold deltas once they pile past the
-        // threshold, keeping probe-side file counts bounded under
-        // continuous ingest (compaction here stays inside the stream's
-        // own single-writer window — see the Keysets contract; replay
-        // batches land nothing and so never trigger a fold)
-        if (landed && maxDeltasBeforeCompact != Int.MaxValue &&
-            graft.llm.Dedup.bandDeltaCount(batch.sparkSession, indexPath)
-              >= maxDeltasBeforeCompact)
-          graft.llm.Dedup.compactBandDeltas(batch.sparkSession, indexPath)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+                        k: Int = 32, r: Int = 4, shingleN: Int = 3): Unit = {
+    import s.implicits._
+    graft.tsdb.Keysets.ensureBase(s, indexPath, "bands")(tmp =>
+      graft.tsdb.Keysets.writeEmpty(graft.llm.Dedup.bandSigsPortable(
+        Seq.empty[(Long, String)].toDF("id", "text"), "id", "text"), tmp))
+    runBatches(docsStream, checkpoint) { (batch, batchId) =>
+      // band params must match what probes of this artifact use —
+      // they ride the sink signature because the band index (unlike
+      // the IVF quantizer) stores no geometry to derive them from
+      graft.llm.Dedup.appendBandDelta(batch.sparkSession, batch, idCol, textCol,
+        indexPath, k = k, r = r, shingleN = shingleN, txn = Some((checkpoint, batchId)))
+    }
   }
 
   /** Steady-state TEXT-index maintenance from a document stream — the
@@ -547,29 +529,21 @@ object Ingest {
   def maintainTextIndex(s: SparkSession, docsStream: DataFrame,
                         indexPath: String, checkpoint: String,
                         idCol: String = "doc_id", textCol: String = "text",
-                        buckets: Int = 16,
-                        maxDeltasBeforeCompact: Int = Int.MaxValue): Unit = {
-    graft.llm.Retrieval.ensureEmptyTextBase(s, indexPath, buckets)
-    val q = docsStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val landed = graft.llm.Retrieval.appendTextDeltaTxn(batch.sparkSession,
-          batch, idCol, textCol, indexPath,
-          streamId = checkpoint, batchId = batchId)
-        // inline maintenance: fold deltas past the threshold (see
-        // maintainBandIndex — compaction rides the stream's own
-        // single-writer window, and replayed batches land nothing so
-        // they can never trigger a fold)
-        if (landed && maxDeltasBeforeCompact != Int.MaxValue &&
-            graft.llm.Retrieval.textDeltaCount(batch.sparkSession, indexPath)
-              >= maxDeltasBeforeCompact)
-          graft.llm.Retrieval.compactTextDeltas(batch.sparkSession, indexPath)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+                        buckets: Int = 16): Unit = {
+    import s.implicits._
+    // the empty base is written un-partitioned (Keysets.writeEmpty);
+    // `tb` rides as a data column, which unions by name with the
+    // partitioned deltas and still bucket-prunes them
+    graft.tsdb.Keysets.ensureBase(s, indexPath, "postings") { tmp =>
+      val (postings, stats) = graft.llm.Retrieval.postingRows(
+        Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text", buckets)
+      graft.tsdb.Keysets.writeEmpty(postings, tmp)
+      stats.coalesce(1).write.parquet(s"$tmp/_stats")
+    }
+    runBatches(docsStream, checkpoint) { (batch, batchId) =>
+      graft.llm.Retrieval.appendTextDelta(batch.sparkSession, batch, idCol, textCol,
+        indexPath, txn = Some((checkpoint, batchId)))
+    }
   }
 
   /** EP2'': steady-state ANN-index maintenance from an EMBEDDING stream —
@@ -608,45 +582,39 @@ object Ingest {
     require(centroids.getFileSystem(s.sparkContext.hadoopConfiguration)
       .exists(centroids),
       s"maintainIvfIndex needs a trained quantizer at $indexPath — run buildIvfIndex first")
-    val q = vecStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val landed = graft.llm.Similarity.appendIvfDeltaTxn(batch.sparkSession,
-          batch, indexPath, streamId = checkpoint, batchId = batchId)
-        // fold deltas past the threshold (see maintainBandIndex): file
-        // counts stay bounded under continuous ingest; compaction rides
-        // the stream's single-writer window, and the txn markers merge
-        // into the base so replay-skip survives the fold. Folding does
-        // NOT retrain the quantizer — Similarity.deltaFraction measures
-        // drift against the _trained count pinned at build time, so the
-        // retrain signal SURVIVES the fold; this threshold is purely an
-        // IO guardrail, orthogonal to the drift trigger.
-        if (landed && maxDeltasBeforeCompact != Int.MaxValue &&
-            graft.llm.Similarity.ivfDeltaCount(batch.sparkSession, indexPath)
-              >= maxDeltasBeforeCompact)
-          graft.llm.Similarity.compactIvfDeltas(batch.sparkSession, indexPath)
-        // drift-triggered retrain: policy (the threshold) and mechanism
-        // (fold + retrain + atomic swap) both inside the single-writer
-        // window. Gated on `landed` so a replayed batch — which appends
-        // nothing — can never pay a redundant O(corpus) training run.
-        if (landed && retrainOnDrift &&
-            graft.llm.Similarity.needsRetrain(batch.sparkSession, indexPath,
-              retrainThreshold)) {
-          // tag derives from the fingerprint being replaced; the
-          // retrained@ suffix is replaced, not stacked, so repeated
-          // retrains keep the tag bounded
-          val base = graft.tsdb.Keysets
-            .fingerprint(batch.sparkSession, indexPath)
-            .getOrElse("ivf").replaceAll("\\|retrained@.*$", "")
-          graft.llm.Similarity.retrainIvfIndex(batch.sparkSession, indexPath,
-            s"$base|retrained@$checkpoint:$batchId", retrainParams)
-        }
-        ()
+    runBatches(vecStream, checkpoint) { (batch, batchId) =>
+      val landed = graft.llm.Similarity.appendIvfDelta(batch.sparkSession,
+        batch, indexPath, txn = Some((checkpoint, batchId)))
+      // fold deltas past the threshold: file counts stay bounded under
+      // continuous ingest; compaction rides the stream's single-writer
+      // window (the Keysets contract), a replayed batch lands nothing
+      // and so never triggers a fold, and the txn markers merge into
+      // the base so replay-skip survives the fold. Folding does
+      // NOT retrain the quantizer — Similarity.deltaFraction measures
+      // drift against the _trained count pinned at build time, so the
+      // retrain signal SURVIVES the fold; this threshold is purely an
+      // IO guardrail, orthogonal to the drift trigger.
+      if (landed && maxDeltasBeforeCompact != Int.MaxValue &&
+          graft.llm.Similarity.ivfDeltaCount(batch.sparkSession, indexPath)
+            >= maxDeltasBeforeCompact)
+        graft.llm.Similarity.compactIvfDeltas(batch.sparkSession, indexPath)
+      // drift-triggered retrain: policy (the threshold) and mechanism
+      // (fold + retrain + atomic swap) both inside the single-writer
+      // window. Gated on `landed` so a replayed batch — which appends
+      // nothing — can never pay a redundant O(corpus) training run.
+      if (landed && retrainOnDrift &&
+          graft.llm.Similarity.needsRetrain(batch.sparkSession, indexPath,
+            retrainThreshold)) {
+        // tag derives from the fingerprint being replaced; the
+        // retrained@ suffix is replaced, not stacked, so repeated
+        // retrains keep the tag bounded
+        val base = graft.tsdb.Keysets
+          .fingerprint(batch.sparkSession, indexPath)
+          .getOrElse("ivf").replaceAll("\\|retrained@.*$", "")
+        graft.llm.Similarity.retrainIvfIndex(batch.sparkSession, indexPath,
+          s"$base|retrained@$checkpoint:$batchId", retrainParams)
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Fold the per-micro-batch point landing directories into ONE

@@ -1,6 +1,6 @@
 package graft.tsdb
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Keyset / keyspace management (SURVEY §1.1 multi-tenancy): keysets are
@@ -136,13 +136,24 @@ object Keysets {
 
   private val DeltaRe = "delta_(\\d+)".r
 
+  /** Finish an interrupted swap of the artifact root (a rebuild), then
+    * of its base table `sub` (a compaction). Every entry point below
+    * runs this first: a writer that skipped it would land a base or
+    * delta next to a committed `.tmp` and orphan the state inside. */
+  private def repairArtifact(s: SparkSession, path: String, sub: String): Unit = {
+    repairSwap(s, path)
+    repairSwap(s, s"$path/$sub")
+  }
+
   private[graft] def foldedThru(s: SparkSession, path: String, sub: String): Int =
     readMarker(s, s"$path/$sub/_folded").fold(-1)(_.trim.toInt)
 
-  /** Committed, un-folded delta dirs under `path`, ascending; any delta
-    * caught in the swap crash window is repaired first. */
+  /** Committed, un-folded delta dirs under `path`, ascending; the
+    * artifact and any delta caught in the swap crash window are
+    * repaired first. */
   private[graft] def deltaDirs(s: SparkSession, path: String,
                                sub: String): Seq[String] = {
+    repairArtifact(s, path, sub)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Nil
@@ -164,16 +175,50 @@ object Keysets {
 
   /** Base table ∪ committed deltas — one read per root (a multi-root
     * read trips Spark's common-basePath partition discovery), unioned
-    * by name; the base dir's own interrupted swap is repaired first.
-    * Missing columns null-fill: tombstone deltas carry only (id, tomb)
-    * and live rows never carry `tomb`. */
+    * by name; [[deltaDirs]] repairs the artifact before the base is
+    * read. Missing columns null-fill: tombstone deltas carry only (id,
+    * tomb) and live rows never carry `tomb`. */
   private[graft] def readWithDeltas(s: SparkSession, path: String,
                                     sub: String): DataFrame = {
-    repairSwap(s, s"$path/$sub")
     (s"$path/$sub" +: deltaDirs(s, path, sub).map(d => s"$d/$sub"))
       .map(r => s.read.parquet(r))
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
+
+  /** One table of a swap-managed artifact (`$path/$sub`), read after
+    * the artifact is repaired — for the tables that never grow deltas
+    * (the IVF quantizer's centroids and codebooks, a folded base). */
+  private[graft] def readTable(s: SparkSession, path: String, sub: String): DataFrame = {
+    repairArtifact(s, path, sub)
+    s.read.parquet(s"$path/$sub")
+  }
+
+  /** Bootstrap of a stream-grown artifact: commit `write`'s base table
+    * at `$path/$sub` unless one exists (the corpus then accumulates as
+    * deltas until a compaction folds it). Repaired first: a base
+    * bootstrapped next to a committed root `.tmp` would orphan it. */
+  private[graft] def ensureBase(s: SparkSession, path: String, sub: String)
+                               (write: String => Unit): Unit = {
+    repairArtifact(s, path, sub)
+    val base = new org.apache.hadoop.fs.Path(s"$path/$sub")
+    if (!base.getFileSystem(s.sparkContext.hadoopConfiguration).exists(base))
+      swapBuiltDir(s, s"$path/$sub")(write)
+  }
+
+  /** Write a frame with no rows at `dir` as ONE unpartitioned task: a
+    * zero-row write can plan no tasks, and a zero-row partitioned write
+    * lands a schema-less dir no reader can open. Bootstraps (empty by
+    * construction) call this directly, the rest via [[writeTable]]. */
+  private[graft] def writeEmpty(df: DataFrame, dir: String): Unit =
+    df.repartition(1).write.parquet(dir)
+
+  /** Write `df` at `dir` through `write`, or through [[writeEmpty]]
+    * when it holds no rows — checked on `df` itself, before any
+    * repartition in `write`, so the check costs no shuffle. */
+  private[graft] def writeTable(df: DataFrame, dir: String)
+                               (write: DataFrame => DataFrameWriter[Row]): Unit =
+    if (df.isEmpty) writeEmpty(df, dir)
+    else write(df).parquet(dir)
 
   /** Apply tombstone deltas to a [[readWithDeltas]] union: a row with
     * `tomb = true` shadows EVERY row of its id (ids are never reused —
@@ -189,12 +234,9 @@ object Keysets {
     if (!df.columns.contains("tomb")) df
     else {
       val tombs = df.where(col("tomb")).select(idCol)
-      val probe = math.min(maxBroadcastRows + 1, Int.MaxValue.toLong).toInt
-      val tombSide =
-        if (tombs.limit(probe).count() <= maxBroadcastRows) broadcast(tombs)
-        else tombs.hint("shuffle_hash")
       df.where(col("tomb").isNull)
-        .join(tombSide, Seq(idCol), "left_anti")
+        .join(graft.core.Exec.gatedBroadcast(tombs, tombs, maxBroadcastRows),
+          Seq(idCol), "left_anti")
         .drop("tomb")
     }
 
@@ -204,18 +246,6 @@ object Keysets {
   private def deltaId(dir: String): Int = {
     val name = new org.apache.hadoop.fs.Path(dir).getName
     DeltaRe.findFirstMatchIn(name).get.group(1).toInt
-  }
-
-  /** Land one batch as the next delta (id clears BOTH visible deltas
-    * and the folded watermark — a reused folded id would be invisible
-    * to readers). `write` stages the batch under `$tmp/$sub`. */
-  private[graft] def appendDelta(s: SparkSession, path: String, sub: String)
-                                (write: String => Unit): Unit = {
-    val next = (deltaDirs(s, path, sub).map(deltaId(_) + 1)
-      :+ (foldedThru(s, path, sub) + 1) :+ 0).max
-    swapBuiltDir(s, f"$path/delta_$next%04d") { tmp =>
-      write(s"$tmp/$sub")
-    }
   }
 
   // Streaming-sink replay idempotence — the Delta Lake txnAppId /
@@ -241,42 +271,42 @@ object Keysets {
       writeMarker(s, s"$dir/_txn",
         txn.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("\n"))
 
-  /** Highest batch id `streamId` has committed to this artifact:
-    * max over the base table's merged `_txn` and every visible
-    * delta's `_txn`; -1 when the stream has never written. */
-  private[graft] def committedBatch(s: SparkSession, path: String, sub: String,
-                                    streamId: String): Long = {
-    repairSwap(s, s"$path/$sub")
-    val dirs = s"$path/$sub" +: deltaDirs(s, path, sub)
-    dirs.flatMap(d => parseTxn(s, d).get(streamId)).foldLeft(-1L)(math.max)
-  }
-
-  /** Land one micro-batch exactly once: skipped (returns false) when
-    * `streamId` already committed `batchId` — whether the original
-    * delta is still visible or long since folded into the base. The
-    * delta id itself auto-allocates, so concurrent-regime writers
+  /** Land one batch as the next delta (id clears BOTH visible deltas
+    * and the folded watermark — a reused folded id would be invisible
+    * to readers). `write` stages the batch under `$tmp/$sub`; build the
+    * payload inside it, so a skipped batch runs no Spark job. With
+    * `txn = Some((streamId, batchId))` it lands exactly once: skipped
+    * (returns false) when the base's merged `_txn` or a visible
+    * delta's shows `batchId` committed — visible or long since folded;
+    * else the record lands at the delta ROOT, seen by readers of any
+    * sub. Auto-allocated ids mean concurrent-regime writers
     * (takedowns, manual appends) can never be overwritten by a
     * replayed stream batch. */
-  private[graft] def appendDeltaTxn(s: SparkSession, path: String, sub: String,
-                                    streamId: String, batchId: Long)
-                                   (write: String => Unit): Boolean = {
-    if (committedBatch(s, path, sub, streamId) >= batchId) return false
-    appendDelta(s, path, sub) { tmp =>
-      write(tmp)
-      // tmp is "$delta.tmp/$sub"-shaped only for the payload; the txn
-      // marker sits at the delta ROOT so readers of any sub see it
-      writeTxn(s, new org.apache.hadoop.fs.Path(tmp).getParent.toString,
-        Map(streamId -> batchId))
+  private[graft] def appendDelta(s: SparkSession, path: String, sub: String,
+                                 txn: Option[(String, Long)] = None)
+                                (write: String => Unit): Boolean = {
+    val deltas = deltaDirs(s, path, sub)
+    val skip = txn.exists { case (streamId, batchId) =>
+      (s"$path/$sub" +: deltas).flatMap(d => parseTxn(s, d).get(streamId))
+        .foldLeft(-1L)(math.max) >= batchId
+    }
+    if (skip) return false
+    val next = (deltas.map(deltaId(_) + 1) :+ (foldedThru(s, path, sub) + 1) :+ 0).max
+    swapBuiltDir(s, f"$path/delta_$next%04d") { tmp =>
+      write(s"$tmp/$sub")
+      txn.foreach { case (streamId, batchId) => writeTxn(s, tmp, Map(streamId -> batchId)) }
     }
     true
   }
 
   /** Fold committed deltas into the base table: `rewrite` stages the
-    * merged frame at the given tmp path; the watermark AND the merged
-    * per-stream txn records travel inside the swapped base dir, so
-    * both survive the fold and spent delta dirs are deleted
-    * best-effort. */
-  private[graft] def compactDeltas(s: SparkSession, path: String, sub: String)
+    * merged live rows at the given tmp path — tombstones on `idCol`
+    * applied, so compaction is where deferred deletes become physical;
+    * the watermark AND the merged per-stream txn records travel inside
+    * the swapped base dir, so both survive the fold and spent delta
+    * dirs are deleted best-effort. */
+  private[graft] def compactDeltas(s: SparkSession, path: String, sub: String,
+                                   idCol: String)
                                   (rewrite: (DataFrame, String) => Unit): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -288,9 +318,9 @@ object Keysets {
       .foldLeft(Map.empty[String, Long]) { (acc, m) =>
         m.foldLeft(acc) { case (a, (k, v)) => a.updated(k, math.max(v, a.getOrElse(k, -1L))) }
       }
-    val merged = readWithDeltas(s, path, sub)
+    val live = dropTombstoned(readWithDeltas(s, path, sub), idCol)
     swapBuiltDir(s, s"$path/$sub") { tmp =>
-      rewrite(merged, tmp)
+      rewrite(live, tmp)
       writeMarker(s, s"$tmp/_folded", maxId.toString)
       writeTxn(s, tmp, txn)
     }

@@ -16,36 +16,36 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * ([[Dot4.of]], [[MinHashSig.of]]) needs no registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => RewriteHofDot)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+  }
+}
 
-  private[graftfn] def intLitPublic(e: Expression, what: String): Int = e match {
+object GraftExtensions {
+  private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal, got $other")
   }
-  private def intLit(e: Expression, what: String): Int = intLitPublic(e, what)
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RewriteHofDot)
-    ext.injectFunction((
-      new FunctionIdentifier("dot4"),
+  /** Every SQL function exposed, with its builder — the one list both
+    * registration paths ([[GraftExtensions.apply]], [[register]])
+    * install, so the two can never validate differently. */
+  private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (new FunctionIdentifier("dot4"),
       new ExpressionInfo(classOf[Dot4].getName, "dot4"),
       (children: Seq[Expression]) => {
         require(children.length == 2, "dot4(arrayA, arrayB)")
         Dot4(children(0), children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
+      }),
+    (new FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
       (children: Seq[Expression]) => {
         require(children.length == 3, "minhash_sig(words, shingleN, k)")
         MinHashSig(children(0),
           intLit(children(1), "shingleN"), intLit(children(2), "k"))
       }))
-  }
-}
-
-object GraftExtensions {
-  private val builders = new GraftExtensions
 
   /** Register directly on a live session (for sessions built without the
     * config — e.g. the driver-owned Verify/Bench sessions). Same
@@ -56,17 +56,8 @@ object GraftExtensions {
         spark.experimental.extraOptimizations :+ RewriteHofDot
     }
     val reg: FunctionRegistry = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("dot4",
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "dot4(arrayA, arrayB)")
-        Dot4(children(0), children(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      (children: Seq[Expression]) => {
-        require(children.length == 3, "minhash_sig(words, shingleN, k)")
-        MinHashSig(children(0),
-          builders.intLitPublic(children(1), "shingleN"),
-          builders.intLitPublic(children(2), "k"))
-      }, "scala_udf")
+    functions.foreach { case (id, _, build) =>
+      reg.createOrReplaceTempFunction(id.funcName, build, "scala_udf")
+    }
   }
 }

@@ -757,8 +757,8 @@ class LlmSpec extends SparkSpec {
     Similarity.buildIvfIndex(spark, base, path, "retrain-base")
     // stream-shaped (txn-marked) append past the trigger, plus a
     // takedown of a TRAINED vector (7 % 3 == 1 → base member)
-    assert(Similarity.appendIvfDeltaTxn(spark, arrivals, path,
-      streamId = "st", batchId = 0L))
+    assert(Similarity.appendIvfDelta(spark, arrivals, path,
+      txn = Some(("st", 0L))))
     Similarity.deleteFromIvfIndex(spark,
       emb.where(col("vec_id") === 7).select("vec_id"), path)
     assert(Similarity.needsRetrain(spark, path))
@@ -788,16 +788,16 @@ class LlmSpec extends SparkSpec {
     // the replay guard SURVIVED the rebuild: the same (stream, batch)
     // lands nothing — without the carried _txn record a replay would
     // double-append the arrivals the retrain just folded in
-    assert(!Similarity.appendIvfDeltaTxn(spark, arrivals, path,
-      streamId = "st", batchId = 0L),
+    assert(!Similarity.appendIvfDelta(spark, arrivals, path,
+      txn = Some(("st", 0L))),
       "replayed batch must skip after a retrain")
     assert(Similarity.readLists(spark, path).count() == emb.count() - 1)
     // a genuinely NEW batch (fresh ids — never reuse a deleted one)
     // still lands against the retrained index
-    assert(Similarity.appendIvfDeltaTxn(spark,
+    assert(Similarity.appendIvfDelta(spark,
       emb.where(col("vec_id") === 3)
         .withColumn("vec_id", col("vec_id") + 1000000L),
-      path, streamId = "st", batchId = 1L))
+      path, txn = Some(("st", 1L))))
     assert(Similarity.readLists(spark, path).count() == emb.count())
   }
 

@@ -311,8 +311,8 @@ class StreamSpec extends SparkSpec {
     Dedup.deleteFromBandIndex(spark, dead, idx)
     val afterDelete = rows(idx)
     assert(afterDelete.size < expected.size)
-    assert(!Dedup.appendBandDeltaTxn(spark, docs.limit(7), "doc_id", "text",
-      idx, streamId = cp, batchId = 0L),
+    assert(!Dedup.appendBandDelta(spark, docs.limit(7), "doc_id", "text",
+      idx, txn = Some((cp, 0L))),
       "a replayed batch must land nothing")
     assert(rows(idx) == afterDelete,
       "the replay must not resurrect tombstoned docs")
@@ -320,13 +320,13 @@ class StreamSpec extends SparkSpec {
     // record into the base — the replay stays skipped afterwards
     Dedup.compactBandDeltas(spark, idx)
     assert(rows(idx) == afterDelete)
-    assert(!Dedup.appendBandDeltaTxn(spark, docs.limit(7), "doc_id", "text",
-      idx, streamId = cp, batchId = 2L),
+    assert(!Dedup.appendBandDelta(spark, docs.limit(7), "doc_id", "text",
+      idx, txn = Some((cp, 2L))),
       "txn watermark must survive compaction")
     // a genuinely NEW batch id still lands
-    assert(Dedup.appendBandDeltaTxn(spark,
+    assert(Dedup.appendBandDelta(spark,
       docs.where(col("doc_id") % 13 === 0), "doc_id", "text",
-      idx, streamId = cp, batchId = 3L))
+      idx, txn = Some((cp, 3L))))
   }
 
   test("stream-grown text index equals a batch rebuild; restart and post-compaction replay are no-ops") {
@@ -364,8 +364,8 @@ class StreamSpec extends SparkSpec {
     val afterDelete = hits(idx)
     assert(!afterDelete.map(_._1).contains(top),
       "a takedown must be invisible to probes immediately")
-    assert(!Retrieval.appendTextDeltaTxn(spark, docs.limit(7), "doc_id", "text",
-      idx, streamId = cp, batchId = 0L),
+    assert(!Retrieval.appendTextDelta(spark, docs.limit(7), "doc_id", "text",
+      idx, txn = Some((cp, 0L))),
       "a replayed batch must land nothing")
     assert(hits(idx) == afterDelete,
       "the replay must not resurrect the tombstoned doc")
@@ -377,13 +377,56 @@ class StreamSpec extends SparkSpec {
       docs.where(col("doc_id") =!= top), "doc_id", "text", fresh, "t")
     assert(hits(idx) == hits(fresh),
       "post-compaction index must equal the live-corpus rebuild")
-    assert(!Retrieval.appendTextDeltaTxn(spark, docs.limit(7), "doc_id", "text",
-      idx, streamId = cp, batchId = 2L),
+    assert(!Retrieval.appendTextDelta(spark, docs.limit(7), "doc_id", "text",
+      idx, txn = Some((cp, 2L))),
       "txn watermark must survive compaction")
     // a genuinely NEW batch id still lands
-    assert(Retrieval.appendTextDeltaTxn(spark,
+    assert(Retrieval.appendTextDelta(spark,
       docs.where(col("doc_id") % 13 === 0), "doc_id", "text",
-      idx, streamId = cp, batchId = 3L))
+      idx, txn = Some((cp, 3L))))
+  }
+
+  test("band and text sinks grow a built index caught in the root swap crash window") {
+    import graft.llm.{Dedup, Retrieval}
+    val docs = graft.core.Tables.documents(spark, sf)
+    val root = java.nio.file.Files.createTempDirectory("graft_sboot_")
+    val srcDir = root.resolve("odd").toString
+    docs.where(col("doc_id") % 2 === 1).repartition(2).write.parquet(srcDir)
+    def stream() = spark.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val fs = new org.apache.hadoop.fs.Path(root.toString)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    type Build = (org.apache.spark.sql.DataFrame, String) => Unit
+    // (sink, batch build, stream sink over the odd docs, index as rows)
+    val sinks = Seq[(String, Build, (String, String) => Unit, String => Seq[String])](
+      ("band",
+        (d, p) => Dedup.buildBandIndex(spark, d, "doc_id", "text", p, "t"),
+        (p, cp) => Ingest.maintainBandIndex(spark, stream(), p, cp),
+        p => Dedup.readBandIndex(spark, p).orderBy("id", "band", "sig")
+          .collect().map(_.toString).toSeq),
+      ("text",
+        (d, p) => Retrieval.buildTextIndex(spark, d, "doc_id", "text", p, "t"),
+        (p, cp) => Ingest.maintainTextIndex(spark, stream(), p, cp),
+        p => (Retrieval.textIndexStats(spark, p).collect() ++
+          Retrieval.bm25TopKStored(spark, p, Seq("spark", "merge", "dup"), 10)
+            .collect()).map(_.toString).toSeq))
+    sinks.foreach { case (name, build, sink, read) =>
+      val idx = root.resolve(s"$name/idx").toString
+      build(docs.where(col("doc_id") % 2 === 0), idx)
+      // crash between a rebuild swap's delete and rename: the committed
+      // index (its _SUCCESS marker inside) sits only at `.tmp`
+      assert(fs.rename(new org.apache.hadoop.fs.Path(idx),
+        new org.apache.hadoop.fs.Path(idx + ".tmp")))
+      sink(idx, root.resolve(s"$name/cp").toString)
+      val whole = root.resolve(s"$name/whole").toString
+      build(docs, whole)
+      val (got, want) = (read(idx), read(whole))
+      val grown = got == want
+      assert(grown, s"$name: the sink must grow the built half, not bootstrap " +
+        s"over it (${want.diff(got).size} of ${want.size} rows missing)")
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(idx + ".tmp")),
+        s"$name: the committed .tmp must be recovered, not orphaned")
+    }
   }
 
   test("stream-appended ivf index: probes equal the batch-appended index; no quantizer, no stream") {

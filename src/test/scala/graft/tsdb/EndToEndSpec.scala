@@ -146,20 +146,36 @@ class EndToEndSpec extends SparkSpec {
     assert(Keysets.list(spark, reg2).count() == 1)
   }
 
-  test("only Keysets opens, creates or commits files on the Hadoop FS") {
-    val io = """fs\.(create|open)\(|"_SUCCESS"""".r
+  /** `file:line` of every line matching `pattern` in the `.scala` files
+    * under `dir`, except the files whose path ends with an `exempt`. */
+  private def sourceLines(dir: String, pattern: scala.util.matching.Regex,
+                          exempt: String*): List[String] = {
     val files = {
-      val st = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       try st.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally st.close()
     }
-    val offenders = for {
+    for {
       f <- files
-      if !f.endsWith(java.nio.file.Paths.get("graft/tsdb/Keysets.scala"))
+      if !exempt.exists(e => f.endsWith(java.nio.file.Paths.get(e)))
       (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      if io.findFirstIn(line).isDefined
+      if pattern.findFirstIn(line).isDefined
     } yield s"$f:${i + 1}"
+  }
+
+  test("only Keysets opens, creates or commits files on the Hadoop FS") {
+    val offenders = sourceLines("src/main",
+      """fs\.(create|open)\(|"_SUCCESS"""".r, "graft/tsdb/Keysets.scala")
     assert(offenders.isEmpty,
       s"go through Keysets.swapBuiltDir / readMarker / writeMarker: $offenders")
+  }
+
+  test("the llm indexes leave swap repair to Keysets; only Ingest starts streams") {
+    val repairs = sourceLines("src/main/scala/graft/llm", """repairSwap\(""".r)
+    assert(repairs.isEmpty,
+      s"read and write index tables through the Keysets delta lifecycle: $repairs")
+    val streams = sourceLines("src/main", """\.writeStream""".r,
+      "graft/stream/Ingest.scala")
+    assert(streams.isEmpty, s"run streams through graft.stream.Ingest: $streams")
   }
 }
