@@ -327,9 +327,15 @@ object Dedup {
     // no shuffle) into a single union-find task emitting the exact
     // same (node, min component id) labeling. Deterministic: the
     // label is the component's min node id whatever the union order.
+    // union-find keys nodes by long, so it serves integral ids only;
+    // string or fractional ids (a cast would fail or merge distinct
+    // nodes) take the iterative loop — a schema check, no Spark job
+    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+    val integral = p.schema.fields.map(_.dataType)
+      .forall(Set[DataType](ByteType, ShortType, IntegerType, LongType).contains)
     val budget = p.sparkSession.conf.getOption(CcEdgeBudgetKey)
       .map(_.toLong).getOrElse(8L * 1000 * 1000)
-    if (p.count() <= budget) {
+    if (integral && p.count() <= budget) {
       import p.sparkSession.implicits._
       return p.select(col("a_id").cast("long"), col("b_id").cast("long"))
         .as[(Long, Long)]
@@ -369,10 +375,11 @@ object Dedup {
     var labels = graft.core.Exec.materialize(edges
       .groupBy(col("dst").as("node"))
       .agg(min(least(col("src"), col("dst"))).as("label")))
-    // convergence metric: labels only ever DECREASE, so the label sum is
-    // strictly monotone until fixpoint — one aggregate per round instead
-    // of a join+count against the previous round (decimal: a BIGINT sum
-    // over corpus-scale ids would wrap)
+    // convergence metric: labels only ever DECREASE, so for integral ids
+    // the label sum is strictly monotone until fixpoint — one aggregate
+    // per round instead of a join+count against the previous round
+    // (decimal: a BIGINT sum over corpus-scale ids would wrap). Other id
+    // types have no exact sum, so their rounds compare by anti join.
     def labelSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO) // empty input: sum is NULL
@@ -380,7 +387,7 @@ object Dedup {
     // convergence compare: a diameter-1 graph (dup pairs around one
     // representative — the common near-dup shape) is detected done
     // after a single join round instead of two
-    var prevSum: java.math.BigDecimal = labelSum(labels)
+    var prevSum = if (integral) labelSum(labels) else null
     var converged = false
     while (!converged) {
       val viaNbr = edges.join(labels, edges("src") === labels("node"))
@@ -388,9 +395,11 @@ object Dedup {
       val next = graft.core.Exec.materialize(
         labels.select("node", "label").union(viaNbr)
           .groupBy("node").agg(min("label").as("label")))
-      val s = labelSum(next)
-      converged = prevSum != null && s.compareTo(prevSum) == 0
-      prevSum = s
+      if (integral) {
+        val s = labelSum(next)
+        converged = s.compareTo(prevSum) == 0
+        prevSum = s
+      } else converged = next.join(labels, Seq("node", "label"), "left_anti").isEmpty
       labels = next
     }
     labels

@@ -590,24 +590,31 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stored edge layout: family rows serve off the bucket files, zero pre-agg exchange (r18)") {
-    // VERDICT r17 #2: with the shared layout prebuilt, an ordinary
-    // family row (not just graph_edges_stored) must read the bucketed
-    // table — no lineitem scan, no edge self-join — and its per-node
+    // VERDICT r17 #2: an ordinary family row (not just
+    // graph_edges_stored) must read the bucketed table it builds on
+    // first use — no lineitem scan, no edge self-join — and its per-node
     // aggregate must ride HashPartitioning(src) from the bucket layout:
     // the only exchanges left are the node-sized histogram re-key and
     // the D1 orderBy.
-    rel.Graph.prebuildStoredEdges(spark, sf)
-    try {
-      val p = plan("graph_degree_hist")
-      assert(p.contains(rel.Graph.edgeTableName(sf)),
-        s"family row did not take the stored path:\n$p")
-      assert(!p.contains("lineitem"),
-        s"stored path must not rebuild edges from lineitem:\n$p")
-      val exchanges = p.linesIterator.count(_.contains("Exchange"))
-      assert(exchanges <= 2,
-        s"stored-path aggregate must ride the bucketing (expected <= 2 " +
-          s"exchanges: histogram re-key + orderBy), got $exchanges:\n$p")
-    } finally rel.Graph.invalidateStoredEdges(sf)
+    val p = plan("graph_degree_hist")
+    assert(p.contains(rel.Graph.edgeTableName(sf)),
+      s"family row did not read the stored layout:\n$p")
+    assert(!p.contains("lineitem"),
+      s"stored path must not rebuild edges from lineitem:\n$p")
+    val exchanges = p.linesIterator.count(_.contains("Exchange"))
+    assert(exchanges <= 2,
+      s"stored-path aggregate must ride the bucketing (expected <= 2 " +
+        s"exchanges: histogram re-key + orderBy), got $exchanges:\n$p")
+  }
+
+  test("graph rows: build-side job counts with the edge layout current") {
+    // the eager actions a graph row runs while it builds its frame, with
+    // the stored layout already current (no build inside the count)
+    rel.Graph.edges(spark, sf)
+    val aa = jobCount(SparkEntry.queries("graph_adamic_adar")(spark, sf))
+    val pr = jobCount(SparkEntry.queries("graph_pagerank")(spark, sf))
+    assert((aa, pr) == ((4, 6)),
+      s"build-side jobs moved: graph_adamic_adar $aa, graph_pagerank $pr")
   }
 
   test("wire matrix serves all four request forms off ONE materialized slice (r18)") {

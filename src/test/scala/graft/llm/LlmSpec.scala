@@ -654,6 +654,17 @@ class LlmSpec extends SparkSpec {
     assert(fast == Map(7L -> 2L, 2L -> 2L, 9L -> 2L, 4L -> 2L,
       11L -> 11L, 12L -> 11L, 13L -> 11L,
       20L -> 20L, 21L -> 20L, 30L -> 30L, 31L -> 30L))
+    // non-integral ids must not take the long-keyed union-find: its cast
+    // fails on string ids under ANSI and merges fractional ids sharing
+    // an integer part (1.5, 1.2) into one node
+    val named = Seq(("g", "b"), ("b", "k"), ("x", "y")).toDF("a_id", "b_id")
+    assert(Dedup.clusterLabels(named).as[(String, String)].collect().toMap ==
+      Map("g" -> "b", "b" -> "b", "k" -> "b", "x" -> "x", "y" -> "x"))
+    val frac = Seq((1.5, 2.5), (1.2, 3.0), (1.9, 1.7), (1.7, 1.6))
+      .toDF("a_id", "b_id")
+    assert(Dedup.clusterLabels(frac).as[(Double, Double)].collect().toMap ==
+      Map(1.5 -> 1.5, 2.5 -> 1.5, 1.2 -> 1.2, 3.0 -> 1.2,
+        1.9 -> 1.6, 1.7 -> 1.6, 1.6 -> 1.6))
   }
 
   test("content tag: order-invariant; same-count change invalidates the index") {

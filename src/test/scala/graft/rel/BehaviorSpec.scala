@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
 class BehaviorSpec extends SparkSpec {
   import spark.implicits._
 
-  private def run(name: String) = SparkEntry.queries(name)(spark, sf)
+  private def run0(name: String, dir: String) = SparkEntry.queries(name)(spark, dir)
+  private def run(name: String) = run0(name, sf)
 
   test("funnel stages are monotone non-increasing and correctly ordered") {
     val rows = run("evt_funnel").as[(String, Long)].collect().toSeq
@@ -578,23 +579,60 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("stored edge layout: every family row is bitwise path-independent (r18)") {
-    // VERDICT r17 #2 equivalence contract: the shared bucketed layout
-    // changes data movement, never results. Run representative rows —
-    // both dispatch regimes, iterative peels, the copart wedge path —
-    // once off the prebuilt bucket files and once inline, and compare
-    // collected rows exactly. (Oracle coverage exercises whichever path
-    // the harness happens to take; this pins the OTHER one too.)
+    // one edge source, two ways to reach it: a row that finds no current
+    // layout builds it inside its own call, a later row reads the files
+    // already there. Run representative rows — both dispatch regimes,
+    // iterative peels, the copart wedge path — once right after the
+    // layout is dropped and once over the reused layout, and compare
+    // collected rows exactly.
     val names = Seq("graph_degree_hist", "graph_pagerank",
       "graph_pagerank_copart", "graph_kcore", "graph_adamic_adar",
       "graph_adamic_adar_copart", "graph_components", "graph_triangles")
-    Graph.prebuildStoredEdges(spark, sf)
-    val storedRes =
-      try names.map(n => n -> run(n).collect().toSeq)
-      finally Graph.invalidateStoredEdges(sf)
-    storedRes.foreach { case (n, storedRows) =>
-      val inlineRows = run(n).collect().toSeq
-      assert(storedRows == inlineRows,
-        s"$n diverges between stored and inline edge paths")
+    val t = Graph.edgeTableName(sf)
+    names.foreach { n =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val builtRows = run(n).collect().toSeq
+      assert(spark.catalog.tableExists(t), s"$n must build the stored layout")
+      val reusedRows = run(n).collect().toSeq
+      assert(builtRows == reusedRows,
+        s"$n diverges between a freshly built and a reused edge layout")
+    }
+  }
+
+  test("stored edge layout: built on first use, reused, rebuilt when lineitem changes") {
+    // the graph family's one edge source: the first row builds the
+    // bucketed layout, a later row reads the same files, and a rewritten
+    // lineitem rebuilds the layout before the next row answers
+    val dir = java.nio.file.Files.createTempDirectory("graft_edges").toString
+    val t = Graph.edgeTableName(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def writeLineitem(rows: Seq[(Long, Long)]): Unit =
+      rows.toDF("l_orderkey", "l_partkey").write.mode("overwrite")
+        .parquet(s"$dir/lineitem.parquet")
+    def hist() = run0("graph_degree_hist", dir).as[(Long, Long)].collect().toSeq
+    def files(): Map[String, Long] = spark.table(t).inputFiles.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      f -> p.getFileSystem(conf).getFileStatus(p).getModificationTime
+    }.toMap
+    try {
+      // degrees 10:3, 11:2, 12:2, 13:1
+      writeLineitem(Seq(1L -> 10L, 1L -> 11L, 1L -> 12L, 2L -> 10L, 2L -> 13L))
+      assert(!spark.catalog.tableExists(t))
+      assert(hist() == Seq(1L -> 1L, 2L -> 2L, 3L -> 1L))
+      assert(spark.catalog.tableExists(t), "the first graph row must build the layout")
+      val built = files()
+      assert(built.nonEmpty)
+      assert(run0("graph_pagerank", dir).collect().length == 4)
+      assert(files() == built, "a later graph row must leave the stored files untouched")
+      // degrees 10:1, 11:2, 12:2, 13:1
+      writeLineitem(Seq(1L -> 10L, 1L -> 11L, 2L -> 12L, 2L -> 13L, 3L -> 11L, 3L -> 12L))
+      assert(hist() == Seq(1L -> 2L, 2L -> 2L))
+      assert(files().keySet.intersect(built.keySet).isEmpty,
+        "a rewritten lineitem must rebuild the layout")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val d = new org.apache.hadoop.fs.Path(dir)
+      d.getFileSystem(conf).delete(d, true)
     }
   }
 }
