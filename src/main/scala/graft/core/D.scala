@@ -74,17 +74,20 @@ object D {
     * (|y| < 1e9 → ulp ≤ ~1.2e-7 ≪ the 1e-4 band). Everything inside
     * the guard takes the exact BigDecimal path, so boundary inputs —
     * including doubles whose shortest repr ends in 5 at the 5th
-    * decimal — are always quantized by the reference rule. */
-  def q4(x: Double): Long = {
+    * decimal — are always quantized by the reference rule.
+    *
+    * NaN and ±Inf return null, as the cast returns NULL; a fold skips
+    * such a term the way SUM skips NULL. */
+  def q4(x: Double): java.lang.Long = {
     val y = x * 10000.0
     val a = math.abs(y)
-    if (a >= 1e9) q4Slow(x)
-    else {
+    if (a < 1e9) {
       val f = a - math.floor(a)
       if (f > 0.4999 && f < 0.5001) q4Slow(x)
       // off-boundary every half-rounding rule agrees; rint is branch-free
       else math.rint(y).toLong
-    }
+    } else if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) null
+    else q4Slow(x)
   }
   private def q4Slow(x: Double): Long =
     java.math.BigDecimal.valueOf(x)

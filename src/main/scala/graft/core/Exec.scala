@@ -8,56 +8,29 @@ import org.apache.spark.sql.DataFrame
   * the main tree goes through. */
 object Exec {
 
-  /** Reliable-materialization switch: `SPARK_GRAFT_RELIABLE=1` (env) or
-    * `-Dgraft.reliable=1` (the prop exists because env vars can't be set
-    * per-JVM under a forked sbt test run). No test sets either today, so
-    * the reliable arm is unexercised by the suite; ROADMAP item 4's
-    * force-scale sweep is where it gets checked. */
-  private def reliableMode: Boolean =
-    sys.props.get("graft.reliable").orElse(sys.env.get("SPARK_GRAFT_RELIABLE"))
-      .contains("1")
-
   /** Cut a plan and materialize it eagerly — THE materializer for every
     * shared-scan slice, self-join input, and fixpoint-loop round in the
     * main tree (one definition, switchable at once).
     *
-    * Default: `localCheckpoint(eager)` — cheapest on local[n], but the
+    * The session's checkpoint dir is the switch. Unset (the local
+    * default): `localCheckpoint(eager)` — cheapest on local[n], but the
     * truncated lineage lives in UNREPLICATED executor block storage, so
     * on a real cluster an executor loss makes the frame unrecomputable
-    * mid-query. With [[reliableMode]] on, the cut is a RELIABLE
-    * checkpoint instead: blocks land under the checkpoint dir (HDFS/
-    * object store on a cluster), surviving executor loss — the setting a
-    * 100 TB deployment runs with. Both variants truncate lineage, which
-    * the label-propagation loops depend on (a lineage-keeping persist
-    * would stack O(rounds) of join plans). Reliable-mode checkpoint
-    * files are reclaimed by the ContextCleaner only under
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (set it at
-    * session build on a long-lived cluster deployment; one-shot jobs
-    * can simply clear the checkpoint dir on exit). */
+    * mid-query. Set (`spark.checkpoint.dir` at context start, or
+    * `SparkContext.setCheckpointDir`): a RELIABLE checkpoint — blocks
+    * land under that dir (HDFS/object store on a cluster), surviving
+    * executor loss, the setting a 100 TB deployment runs with. The
+    * check is a field read: no job, no filesystem call. Both variants
+    * truncate lineage, which the label-propagation loops depend on (a
+    * lineage-keeping persist would stack O(rounds) of join plans).
+    * Reliable checkpoint files are reclaimed by the ContextCleaner only
+    * under `spark.cleaner.referenceTracking.cleanCheckpoints=true` (set
+    * it at session build on a long-lived cluster deployment; one-shot
+    * jobs can simply clear the checkpoint dir on exit). */
   def materialize(df: DataFrame): DataFrame =
-    if (reliableMode) {
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) {
-        // falling back to the DRIVER-LOCAL tmpdir keeps local[n] runs
-        // and tests working, but on a multi-node cluster a non-shared
-        // checkpoint dir defeats the executor-loss durability reliable
-        // mode exists for — warn loudly (once) so a deployment that
-        // forgot sc.setCheckpointDir(<HDFS/object-store path>) sees it
-        val fallback = java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_ckpt"))
-          .toString
-        if (!warnedLocalCkpt.getAndSet(true))
-          System.err.println(
-            s"[graft] WARNING: reliable mode is on but no checkpoint dir " +
-              s"is configured; falling back to driver-local $fallback. On a " +
-              "multi-node cluster set SparkContext.setCheckpointDir to a " +
-              "SHARED path or checkpoints will NOT survive executor loss.")
-        sc.setCheckpointDir(fallback)
-      }
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
-    } else df.localCheckpoint(eager = true)
-
-  private val warnedLocalCkpt = new java.util.concurrent.atomic.AtomicBoolean(false)
+    else df.localCheckpoint(eager = true)
 
   /** Broadcast `df` only when a bounded count probe of `gate` (limit
     * N+1 — it stops scanning past the threshold) says it holds at most

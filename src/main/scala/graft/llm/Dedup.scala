@@ -297,73 +297,85 @@ object Dedup {
   /** Fixpoint (node, label) frame of [[dedupClusters]] without the
     * size/order dressing — callers that only need the label mapping
     * (e.g. dropping non-representatives) skip the sizes aggregate and
-    * join entirely. */
-  /** Conf key for the single-task union-find edge budget (edge count).
-    * The fixpoint below is iteration-free when the VERIFIED pair set —
-    * already a tiny fraction of the corpus after blocking + similarity
-    * thresholds — fits one task's memory: a 16-byte-per-edge stream
-    * into a union-find map, so the default 8M edges is ~128 MB of task
-    * state plus the node-sized parent map, the same working-set class
-    * as one post-shuffle aggregation partition. Above the budget the
-    * SAME fixpoint runs as the iterative min-label loop (the at-scale
-    * path; a 100 TB deployment with a larger-than-8M verified pair set
-    * raises the budget only as far as one executor's task memory).
-    * Same measured-dispatch contract as Graph.nodeStateFits: the gate
-    * reads a count off the already-checkpointed frame, no extra scan. */
-  private[graft] val CcEdgeBudgetKey = "graft.cc.unionFindEdgeBudget"
-
+    * join entirely. Measured dispatch between two arms that compute the
+    * same labeling: [[unionFindLabels]] while the verified pair set
+    * fits [[UnionFindEdgeBudget]], [[minLabelLoop]] past it. */
   def clusterLabels(pairs: DataFrame): DataFrame = {
-    // materialize the pair pipeline BEFORE the undirected union — p is
-    // referenced twice (forward + swapped), and an un-materialized union
-    // would run the candidate-join/verify stages once per side
+    // materialize the pair pipeline BEFORE either arm — the loop
+    // references p twice (forward + swapped), and an un-materialized
+    // union would run the candidate-join/verify stages once per side;
+    // the gate then reads a count off the checkpointed frame, no extra
+    // scan of the corpus
     val p = graft.core.Exec.materialize(pairs.select(col("a_id"), col("b_id")))
-    // r18 (guide §1.2 step 1 — remove unnecessary passes): the
-    // iterative min-label loop pays ≥3 jobs per round (join+agg,
-    // checkpoint, convergence sum) and runs diameter+1 rounds; at
-    // sf0.1 that was 5.6–8.2 s of an 8 s llm_semdedup and most of
-    // graph_components, for graphs whose verified pair sets are a few
-    // thousand rows. Under the edge budget the fixpoint is computed in
-    // ONE job: coalesce(1) over the checkpointed pair blocks (narrow —
-    // no shuffle) into a single union-find task emitting the exact
-    // same (node, min component id) labeling. Deterministic: the
-    // label is the component's min node id whatever the union order.
-    // union-find keys nodes by long, so it serves integral ids only;
-    // string or fractional ids (a cast would fail or merge distinct
-    // nodes) take the iterative loop — a schema check, no Spark job
+    if (integralIds(p) && p.count() <= UnionFindEdgeBudget) unionFindLabels(p)
+    else minLabelLoop(p)
+  }
+
+  /** Single-task union-find edge budget (edge count). The fixpoint is
+    * iteration-free when the VERIFIED pair set — already a tiny
+    * fraction of the corpus after blocking + similarity thresholds —
+    * fits one task's memory: a 16-byte-per-edge stream into a
+    * union-find map, so 8M edges is ~128 MB of task state plus the
+    * node-sized parent map, the same working-set class as one
+    * post-shuffle aggregation partition. Above it the SAME fixpoint
+    * runs as the iterative min-label loop (the at-scale path). */
+  private val UnionFindEdgeBudget = 8L * 1000 * 1000
+
+  /** True iff both id columns are integral — the union-find keys nodes
+    * by long, so string or fractional ids (a cast would fail or merge
+    * distinct nodes) take the loop. A schema check, no Spark job. */
+  private def integralIds(p: DataFrame): Boolean = {
     import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
-    val integral = p.schema.fields.map(_.dataType)
+    p.schema.fields.map(_.dataType)
       .forall(Set[DataType](ByteType, ShortType, IntegerType, LongType).contains)
-    val budget = p.sparkSession.conf.getOption(CcEdgeBudgetKey)
-      .map(_.toLong).getOrElse(8L * 1000 * 1000)
-    if (integral && p.count() <= budget) {
-      import p.sparkSession.implicits._
-      return p.select(col("a_id").cast("long"), col("b_id").cast("long"))
-        .as[(Long, Long)]
-        .coalesce(1)
-        .mapPartitions { it =>
-          val parent = new scala.collection.mutable.LongMap[Long]()
-          def find(x0: Long): Long = {
-            var x = x0
-            while (parent(x) != x) {
-              parent(x) = parent(parent(x)) // path halving
-              x = parent(x)
-            }
-            x
+  }
+
+  /** The union-find arm of [[clusterLabels]] over an integral (a_id,
+    * b_id) pair frame. r18 (guide §1.2 step 1 — remove unnecessary
+    * passes): the iterative min-label loop pays ≥3 jobs per round
+    * (join+agg, checkpoint, convergence sum) and runs diameter+1
+    * rounds; at sf0.1 that was 5.6–8.2 s of an 8 s llm_semdedup and most
+    * of graph_components, for graphs whose verified pair sets are a few
+    * thousand rows. This computes the fixpoint in ONE job: coalesce(1)
+    * over the pair blocks (narrow — no shuffle) into a single
+    * union-find task emitting the exact same (node, min component id)
+    * labeling. Deterministic: the label is the component's min node id
+    * whatever the union order. */
+  private[llm] def unionFindLabels(p: DataFrame): DataFrame = {
+    import p.sparkSession.implicits._
+    p.select(col("a_id").cast("long"), col("b_id").cast("long"))
+      .as[(Long, Long)]
+      .coalesce(1)
+      .mapPartitions { it =>
+        val parent = new scala.collection.mutable.LongMap[Long]()
+        def find(x0: Long): Long = {
+          var x = x0
+          while (parent(x) != x) {
+            parent(x) = parent(parent(x)) // path halving
+            x = parent(x)
           }
-          while (it.hasNext) {
-            val (a, b) = it.next()
-            parent.getOrElseUpdate(a, a)
-            parent.getOrElseUpdate(b, b)
-            val ra = find(a); val rb = find(b)
-            // union by min root: roots only decrease, so the final
-            // root of every component is its min node id
-            if (ra < rb) parent(rb) = ra
-            else if (rb < ra) parent(ra) = rb
-          }
-          parent.keys.toArray.iterator.map(n => (n, find(n)))
+          x
         }
-        .toDF("node", "label")
-    }
+        while (it.hasNext) {
+          val (a, b) = it.next()
+          parent.getOrElseUpdate(a, a)
+          parent.getOrElseUpdate(b, b)
+          val ra = find(a); val rb = find(b)
+          // union by min root: roots only decrease, so the final
+          // root of every component is its min node id
+          if (ra < rb) parent(rb) = ra
+          else if (rb < ra) parent(ra) = rb
+        }
+        parent.keys.toArray.iterator.map(n => (n, find(n)))
+      }
+      .toDF("node", "label")
+  }
+
+  /** The min-label loop arm of [[clusterLabels]] over a (a_id, b_id)
+    * pair frame of any id type: label propagation to fixpoint, lineage
+    * cut per round. */
+  private[llm] def minLabelLoop(p: DataFrame): DataFrame = {
+    val integral = integralIds(p)
     // undirected: propagate both ways (cheap lineage over checkpointed p)
     val edges = p.union(p.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
       .select(col("a_id").as("src"), col("b_id").as("dst"))

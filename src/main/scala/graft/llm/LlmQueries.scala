@@ -937,7 +937,8 @@ object LlmQueries {
               var j = i
               while (j < dim) {
                 val k = (i.toLong << 32) | j.toLong
-                acc(k) = acc.getOrElse(k, 0L) + D.q4(xi * e(j).toDouble)
+                val q = D.q4(xi * e(j).toDouble)
+                if (q != null) acc(k) = acc.getOrElse(k, 0L) + q
                 j += 1
               }
               i += 1

@@ -40,8 +40,8 @@ object Joins {
         .select("o_orderkey", "l_linenumber", "o_totalprice", "l_extendedprice")
         .orderBy("o_orderkey", "l_linenumber", "l_extendedprice")),
 
-    // Co-located join via bucketed tables: both sides pre-bucketed (and
-    // sorted) on the join key, so the join reads bucket files pairwise
+    // Co-located join via bucketed tables: both sides pre-bucketed on
+    // the join key, so the join reads bucket files pairwise
     // with NO shuffle on either side — the layout tool for repeated
     // big⋈big joins at corpus scale, where re-shuffling 100 TB per join
     // is the bottleneck. PlanSpec asserts the exchange-free plan (with

@@ -21,10 +21,12 @@ object Scale {
     // (the sf0.1 edge table: 640 files for 17 MB — every consumer scan
     // paid the opens). HashPartitioning(key, buckets) is the same
     // murmur3-pmod assignment bucketBy uses, so clustered input lands
-    // exactly one file per bucket; the writer's sortBy still sorts
-    // within each file. Results unchanged — layout only.
+    // exactly one file per bucket. No sortBy: Spark 4 reports no sort
+    // order for a bucketed scan (the legacy flag that did is off), and
+    // every consumer hashes — a per-file sort would be paid on each
+    // write and read by nothing. Results unchanged — layout only.
     val w = df.repartition(buckets, col(key))
-      .write.mode("overwrite").bucketBy(buckets, key).sortBy(key)
+      .write.mode("overwrite").bucketBy(buckets, key)
       .format("parquet")
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }

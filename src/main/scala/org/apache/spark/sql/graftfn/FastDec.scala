@@ -6,6 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Native `CAST(double AS DECIMAL(p, s))` with the string-free fast path
@@ -26,18 +27,24 @@ import org.apache.spark.sql.types._
   * disagree (the D.r4s divergence class), so those rows take the slow
   * path. The slow path IS the reference: `Decimal(d)` +
   * `changePrecision` — bit-identical to Cast by construction, including
-  * NaN/±Inf → NULL and the ANSI overflow error (OPTIMIZATION_r18.md,
-  * "D.dec / D.dec10 → graftfn.FastDec"; FastDecSpec pins the error;
-  * ANSI is Spark 4's default and the engine sessions run with it). Off the boundary every half rounding rule agrees, so
-  * rint inside the guard equals HALF_UP exactly.
+  * NaN/±Inf → NULL and overflow → the ANSI arithmetic error, or NULL
+  * in a non-ANSI session (OPTIMIZATION_r18.md, "D.dec / D.dec10 →
+  * graftfn.FastDec"; FastDecSpec pins both). Like `Cast`, the
+  * expression captures the session's ANSI mode when it is built
+  * (`ansi`), so no row reads a conf. Off the boundary every half
+  * rounding rule agrees, so rint inside the guard equals HALF_UP
+  * exactly. The fast path emits up to 16 unscaled digits (2^51 <
+  * 10^16), so `precision` must hold 16.
   *
   * DSpec sweeps randomized + adversarial values against the real Cast
   * for both (18,4) and (28,10); every oracle row exercises it at two
   * scale factors on top.
   */
-case class FastDec(child: Expression, precision: Int, scale: Int)
+case class FastDec(child: Expression, precision: Int, scale: Int,
+                   ansi: Boolean = SQLConf.get.ansiEnabled)
   extends UnaryExpression with ExpectsInputTypes {
-  require(scale >= 0 && scale <= 10 && precision > scale)
+  require(scale >= 0 && scale <= 10 && precision >= 16 && precision > scale,
+    s"fast_dec needs precision >= 16 and 0 <= scale <= 10 (got $precision, $scale)")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(DoubleType)
   override def dataType: DataType = DecimalType(precision, scale)
@@ -46,7 +53,7 @@ case class FastDec(child: Expression, precision: Int, scale: Int)
   override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
-    FastDec.eval(input.asInstanceOf[Double], precision, scale)
+    FastDec.eval(input.asInstanceOf[Double], precision, scale, ansi)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, x => {
@@ -63,7 +70,7 @@ case class FastDec(child: Expression, precision: Int, scale: Int)
           $d = org.apache.spark.sql.types.Decimal.apply(
             (long) Math.rint($y), $precision, $scale);
         } else {
-          $d = $fd.slowCast($x, $precision, $scale);
+          $d = $fd.slowCast($x, $precision, $scale, $ansi);
         }
         if ($d == null) { ${ev.isNull} = true; } else { ${ev.value} = $d; }
       """
@@ -78,26 +85,26 @@ object FastDec {
   def pow10(s: Int): Double = Pow10(s)
 
   /** Interpreted twin of the generated code. */
-  def eval(x: Double, precision: Int, scale: Int): Decimal = {
+  def eval(x: Double, precision: Int, scale: Int, ansi: Boolean = true): Decimal = {
     val y = x * Pow10(scale)
     val a = math.abs(y)
     if (a < 2.251799813685248e15 /* 2^51 */ &&
         math.abs(a - math.floor(a) - 0.5) > 4.0 * Math.ulp(a))
       Decimal(math.rint(y).toLong, precision, scale)
-    else slowCast(x, precision, scale)
+    else slowCast(x, precision, scale, ansi)
   }
 
   /** The reference path — Spark's own cast steps, verbatim: NaN/±Inf →
     * null, `Decimal(d)` (shortest-repr BigDecimal), `changePrecision`
     * (HALF_UP), overflow → the ANSI arithmetic error exactly as Cast
-    * raises it (the engine's sessions run Spark 4's ANSI default; the
-    * surface's queries are range-designed never to overflow, so this
-    * branch firing at all means the same query would have failed under
-    * the plain cast too). */
-  def slowCast(x: Double, precision: Int, scale: Int): Decimal = {
+    * raises it, or null when `ansi` is off (the surface's queries are
+    * range-designed never to overflow, so this branch firing at all
+    * means the same query would have failed under the plain cast too). */
+  def slowCast(x: Double, precision: Int, scale: Int, ansi: Boolean): Decimal = {
     if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) return null
     val d = Decimal(x)
     if (d.changePrecision(precision, scale)) d
+    else if (!ansi) null
     else throw org.apache.spark.sql.errors.QueryExecutionErrors
       .cannotChangeDecimalPrecisionError(Decimal(x), precision, scale)
   }

@@ -107,4 +107,37 @@ class FastDecSpec extends SparkSpec {
       Seq(1.5e14).toDF("x").select(FastDec.of(col("x"), 18, 4)).collect()
     }
   }
+
+  test("FastDec overflow yields the cast's NULL in a non-ANSI session") {
+    val k = "spark.sql.ansi.enabled"
+    val saved = spark.conf.get(k)
+    spark.conf.set(k, "false")
+    try {
+      val got = Seq(1.5e14, 2.5).toDF("x").select(
+        col("x").cast(DecimalType(18, 4)).as("ref"),
+        FastDec.of(col("x"), 18, 4).as("fast")).collect()
+      assert(got.map(_.get(0)).toSeq == Seq(null, new java.math.BigDecimal("2.5000")))
+      assert(got.forall(r => r.get(0) == r.get(1)),
+        s"non-ANSI FastDec must follow the cast: ${got.toSeq}")
+    } finally spark.conf.set(k, saved)
+  }
+
+  test("FastDec refuses a precision its 16-digit fast path can overflow") {
+    // (10, 4) holds 6 integer digits; 1e7 must not reach the fast
+    // path's Decimal(long, 10, 4), which throws where the cast does not
+    intercept[IllegalArgumentException] {
+      Seq(1e7).toDF("x").select(FastDec.of(col("x"), 10, 4)).collect()
+    }
+    val vals = Seq(1e7, -1e7, 2.2e11, -2.2e11, 9.99999e11, 123.45675)
+    sweep(vals, 16, 4)
+  }
+
+  test("D.q4 equals CAST(x AS DECIMAL(18,4)), NULL on NaN and ±Inf") {
+    val vals = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      0.0, -0.0, 1.00005, -1.00005, 123.45675, 0.12345, 1e9, -2.5e-4)
+    val ref = vals.toDF("x").select(col("x").cast(DecimalType(18, 4)))
+      .collect().map(r => Option(r.getDecimal(0)).map(_.unscaledValue.longValue))
+    val got = vals.map(x => Option(graft.core.D.q4(x)).map(_.longValue))
+    assert(got == ref.toSeq, s"q4 $got != cast $ref")
+  }
 }

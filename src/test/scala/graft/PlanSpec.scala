@@ -497,16 +497,18 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("ShuffledHashJoin"),
         s"$n broadcast regime must carry no shuffle-hash node-state join:\n$p")
     }
-    spark.conf.set("graft.graph.nodeStateBroadcastBytes", "1")
+    val kBc = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(kBc)
+    spark.conf.set(kBc, "-1")
     try {
       for (n <- names) {
         val p = plan(n)
         assert(p.contains("ShuffledHashJoin"),
-          s"$n must co-partition node state under a 1-byte budget:\n$p")
+          s"$n must co-partition node state with broadcast joins off:\n$p")
         assert(!p.contains("BroadcastHashJoin"),
           s"$n copart regime must broadcast NOTHING node-sized:\n$p")
       }
-    } finally spark.conf.unset("graft.graph.nodeStateBroadcastBytes")
+    } finally spark.conf.set(kBc, saved)
   }
 
   test("r13 scale twins carry NO within-label self-join") {

@@ -644,12 +644,9 @@ class LlmSpec extends SparkSpec {
       (20L, 21L),                               // pair
       (31L, 30L)                                // reversed orientation
     ).toDF("a_id", "b_id")
-    val fast = Dedup.clusterLabels(pairs)
+    val fast = Dedup.unionFindLabels(pairs)
       .as[(Long, Long)].collect().toMap
-    spark.conf.set(Dedup.CcEdgeBudgetKey, "0") // force the iterative loop
-    val iter =
-      try Dedup.clusterLabels(pairs).as[(Long, Long)].collect().toMap
-      finally spark.conf.unset(Dedup.CcEdgeBudgetKey)
+    val iter = Dedup.minLabelLoop(pairs).as[(Long, Long)].collect().toMap
     assert(fast == iter, s"fast $fast != iterative $iter")
     assert(fast == Map(7L -> 2L, 2L -> 2L, 9L -> 2L, 4L -> 2L,
       11L -> 11L, 12L -> 11L, 13L -> 11L,

@@ -411,10 +411,8 @@ class BehaviorSpec extends SparkSpec {
     // and pin capped == brute force on the capped subgraph, with the
     // engine's exact quantization (dec10 per-term HALF_UP, r4 at the
     // end) so the compare is bitwise, order included
-    spark.conf.set("graft.graph.degreeCap", "100")
-    val got = try run("graph_adamic_adar_capped")
+    val got = Graph.adamicAdarCappedRow(spark, sf, cap = 100)
       .as[(Long, Long, Long, Double)].collect().toSeq
-    finally spark.conf.unset("graft.graph.degreeCap")
     assert(got != uncapped, "a cap below max degree must change the result")
     val li = graft.core.Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_partkey")).distinct()
@@ -455,11 +453,8 @@ class BehaviorSpec extends SparkSpec {
     // against the broadcast regime, which shares the oracle text
     val one = run("graph_adamic_adar_copart")
       .as[(Long, Long, Long, Double)].collect().toSeq
-    spark.conf.set("graft.graph.wedgeSliceBytes", (4L * 1024 * 1024).toString)
-    val many =
-      try run("graph_adamic_adar_copart")
-        .as[(Long, Long, Long, Double)].collect().toSeq
-      finally spark.conf.unset("graft.graph.wedgeSliceBytes")
+    val many = Graph.adamicAdarCopartRow(spark, sf, sliceBytes = 4L * 1024 * 1024)
+      .as[(Long, Long, Long, Double)].collect().toSeq
     assert(many == one,
       s"bucketed copart diverged from single-pass:\n$many\nvs\n$one")
     val bc = run("graph_adamic_adar") // fixture stats → broadcast regime

@@ -170,6 +170,16 @@ class EndToEndSpec extends SparkSpec {
       s"go through Keysets.swapBuiltDir / readMarker / writeMarker: $offenders")
   }
 
+  test("no graft-private settings: no graft.* conf key, env or prop read outside the mains") {
+    // size dispatch follows Spark's own settings (checkpoint dir,
+    // autoBroadcastJoinThreshold) or a named constant
+    val keys = sourceLines("src/main", "\"graft\\.".r)
+    assert(keys.isEmpty, s"no graft.* conf keys or props: $keys")
+    val reads = sourceLines("src/main", """sys\.env|sys\.props\.get""".r,
+      "graft/Bench.scala", "graft/Verify.scala")
+    assert(reads.isEmpty, s"only the Bench and Verify mains read env or props: $reads")
+  }
+
   test("the llm indexes leave swap repair to Keysets; only Ingest starts streams") {
     val repairs = sourceLines("src/main/scala/graft/llm", """repairSwap\(""".r)
     assert(repairs.isEmpty,
