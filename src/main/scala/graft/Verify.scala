@@ -15,7 +15,7 @@ object Verify {
       SparkEntry.queries.view.filterKeys(o).toMap)
     selected.foreach { case (name, fn) =>
       // release blocks pinned by eager localCheckpoints inside the
-      // finished query's plan (Downsample.withFill, Dedup.nearDupPairs*)
+      // finished query's plan (Correlate.pearsonPairs, Dedup.nearDupPairs*)
       // — scoped to the blocks THIS query created (ADVICE r3)
       graft.core.Exec.releasingNewBlocks(spark.sparkContext) {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -57,7 +57,7 @@ object Exec {
 
   /** Run `body`, then release ONLY the persistent-RDD blocks it created
     * (set-diff of ids before/after). Eager localCheckpoints inside query
-    * plans (Downsample.withFill, Dedup.nearDupPairs*) pin executor
+    * plans (Correlate.pearsonPairs, Dedup.nearDupPairs*) pin executor
     * storage; across a 130-query session they accumulate until GC. A
     * blanket `getPersistentRDDs.foreach(unpersist)` sweep is wrong in the
     * other direction: it would irreversibly drop locally-checkpointed

@@ -40,13 +40,13 @@ object Graph {
   // ---------------------------------------------------------------------
   // ONE EDGE SOURCE (VERDICT r17 #2, build-once/analyze-many): every
   // graph row reads the symmetric edge table through [[edges]], stored
-  // ONCE per lineitem source signature as a bucketed+sorted-by-src
+  // ONCE per lineitem source signature as a bucketed-by-src
   // catalog table, so every src-keyed analysis starts from the bucket
   // files with ZERO exchange before its first aggregate/join. At corpus
   // scale nobody re-derives a 240M-edge graph per query. The first graph
   // call after a fixture change pays the build (the llm serving-artifact
-  // precedent); later calls in the same JVM reuse it, and Bench builds
-  // it untimed so per-query rows measure the analysis.
+  // precedent); later calls, in this JVM or any later one, reuse it, and
+  // Bench builds it untimed so per-query rows measure the analysis.
   // `graph_edges_stored` stays the lifecycle row that PRICES the build
   // (wipe + bucketed write + first stored-path aggregate, every run).
   // The oracle texts derive the edges from lineitem in SQL, so the
@@ -85,37 +85,51 @@ object Graph {
     s"v1|b=$buckets|${files.sorted.mkString(",")}"
   }
 
-  /** Signatures of layouts built by THIS JVM, keyed by table name. The
-    * catalog is session-scoped (in-memory, no Hive metastore), so a
-    * fresh JVM's first graph call rebuilds once from the fixture — the
-    * map's job is only to gate REUSE within the process that built it
-    * and to invalidate on fixture change. */
-  private val edgeTableFp =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Where the stored layout of `dir` lives: a fixed path under the
+    * warehouse, written as an EXTERNAL table so that unregistering it
+    * (a session ending, a DROP TABLE) never deletes the files another
+    * JVM may be scanning. Its `_meta` marker holds the source signature
+    * the files were built from. */
+  private[graft] def edgeTableLocation(s: SparkSession, dir: String): String =
+    new org.apache.hadoop.fs.Path(
+      s.conf.get("spark.sql.warehouse.dir"), edgeTableName(dir)).toString
+
   private val edgeBuildLock = new Object
 
-  /** Build (or refresh) the stored bucketed edge layout for `dir`:
-    * drop + delete any stale files (warehouse dirs outlive the
-    * session-scoped catalog), bucketed+sorted write, record the source
-    * signature. Serialized per-JVM so concurrent suites sharing a
-    * warehouse cannot clobber each other mid-write (ADVICE r17).
-    * `force` re-runs the write even when current — the lifecycle row
-    * prices the build on every bench pass. */
+  /** Make the stored bucketed edge layout for `dir` current and
+    * registered. The source signature is stored WITH the files (the
+    * `_meta` marker), so currency survives the JVM: when the marker
+    * matches, a session whose catalog lacks the table registers the
+    * existing files instead of rebuilding them. Otherwise — no layout, a
+    * rewritten lineitem, a different bucket count — drop + delete the
+    * stale files, bucketed write, then the marker (a crash before it
+    * leaves no marker, so the next call rebuilds). Serialized per-JVM so
+    * concurrent suites sharing a warehouse cannot clobber each other
+    * mid-write (ADVICE r17); across JVMs there is no lock, and a forced
+    * or stale rebuild deletes the files in place under any other JVM
+    * reading them. `force` re-runs the write even when current — the
+    * lifecycle row prices the build on every bench pass. */
   private[graft] def buildStoredEdges(s: SparkSession, dir: String,
                                       force: Boolean = false): Unit =
     edgeBuildLock.synchronized {
       val t = edgeTableName(dir)
+      val loc = edgeTableLocation(s, dir)
       val buckets = edgeBuckets(s)
       val fp = edgeSourceSignature(s, dir, buckets)
-      if (!force && edgeTableFp.get(t) == fp && s.catalog.tableExists(t)) return
-      edgeTableFp.remove(t)
+      val current = !force &&
+        graft.tsdb.Keysets.readMarker(s, s"$loc/_meta").contains(fp)
+      if (current && s.catalog.tableExists(t)) return
       s.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), t)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) { fs.delete(loc, true); () }
-      Scale.writeBucketed(edgesFromLineitem(s, dir), t, "src", buckets)
-      edgeTableFp.put(t, fp)
+      if (current)
+        s.sql(s"CREATE TABLE $t (${s.read.parquet(loc).schema.toDDL}) USING parquet " +
+          s"CLUSTERED BY (src) INTO $buckets BUCKETS LOCATION '$loc'")
+      else {
+        val p = new org.apache.hadoop.fs.Path(loc)
+        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        if (fs.exists(p)) { fs.delete(p, true); () }
+        Scale.writeBucketed(edgesFromLineitem(s, dir), t, "src", buckets, Some(loc))
+        graft.tsdb.Keysets.writeMarker(s, s"$loc/_meta", fp)
+      }
     }
 
   /** THE edge source of every graph row: the stored bucketed scan,

@@ -142,8 +142,8 @@ object Correlate {
                    minBuckets: Int): DataFrame = {
     // materialize the REDUCED (series × bucket) frame once: the
     // self-join would otherwise run the whole upstream scan + downsample
-    // aggregate twice, once per side (same pattern as
-    // Downsample.withFill; the drivers release the blocks per query)
+    // aggregate twice, once per side (the drivers release the blocks
+    // per query)
     val down = graft.core.Exec.materialize(downsampled)
     val a = down.select(col(keyCol).as("a_key"), col("bucket_ms"),
       col("value").as("av"))

@@ -1,7 +1,7 @@
 package graft.tsdb
 
 import graft.core.D
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Per-series downsampling: align each point to an interval bucket and
@@ -111,15 +111,21 @@ object Downsample {
           / sum(col("w_ms"))).as("twa"))
   }
 
-  /** Dense bucket spine [t0, t1) × the distinct series present, left-joined
-    * with the downsampled values and filled per policy. The spine is built
-    * with `spark.range` (distributed, no driver-side materialization) and
-    * broadcast against the series list — at scale the spine is tiny
-    * (buckets × series cardinality), the points table is the big side and
-    * was already reduced by the downsample. Fill policies (OpenTSDB):
-    * none (inner join — no spine), zero, null, nan.
+  /** Dense bucket spine [t0, t1) × the distinct series present, each
+    * bucket taking its downsampled value or, where the series has none,
+    * the fill policy's. One per-series aggregate folds each series'
+    * (bucket_ms → value) pairs into a map; the spine is
+    * `sequence(alignedT0, lastBucket, intervalMs)`, exploded per series,
+    * and each spine bucket looks its value up in the map. So the
+    * downsampled frame is read once, building the frame runs no job,
+    * and no broadcast grows with series cardinality: each map holds at
+    * most the spine's `maxBuckets` entries, and a caller that already
+    * partitioned the frame by a subset of `seriesCols` pays no exchange
+    * here. `downsampled` is (seriesCols..., bucket_ms, value), one row
+    * per (series, bucket). Fill policies (OpenTSDB): none (the
+    * downsampled rows as is — no spine), zero, null, nan.
     */
-  def withFill(spark: SparkSession, downsampled: DataFrame,
+  def withFill(downsampled: DataFrame,
                seriesCols: Seq[String], intervalMs: Long,
                t0Ms: Long, t1Ms: Long, fill: String,
                maxBuckets: Long = 100000L): DataFrame = {
@@ -135,27 +141,21 @@ object Downsample {
     require(nBuckets <= maxBuckets,
       s"fill spine would have $nBuckets buckets (> $maxBuckets); " +
         "narrow the time range or coarsen the interval")
-    val spine = spark.range(alignedT0, t1Ms, intervalMs)
-      .toDF("bucket_ms")
-    // materialize the downsampled frame ONCE: the series-list distinct()
-    // and the join side cannot share an exchange (different grouping
-    // keys), so without this the entire upstream points scan + hash
-    // aggregate would execute twice. The checkpointed data is the
-    // REDUCED (series × bucket) frame, not the raw points. Retention:
-    // the blocks live until the frame is GC'd (ContextCleaner) or the
-    // session driver unpersists them — Verify/Bench release all
-    // persistent RDDs after each query.
-    val down = graft.core.Exec.materialize(downsampled)
-    val series = down.select(seriesCols.map(col): _*).distinct()
-    val grid = broadcast(series).crossJoin(spine)
-    val joined = grid.join(down, seriesCols :+ "bucket_ms", "left")
+    val lastBucket = alignedT0 + (nBuckets - 1) * intervalMs
     val filled = fill match {
       case "zero" => coalesce(col("value"), lit(0.0))
       case "null" => col("value")
       case "nan"  => coalesce(col("value"), lit(Double.NaN))
       case other  => throw new IllegalArgumentException(s"unknown fill policy: $other")
     }
-    joined.withColumn("value", filled)
+    downsampled
+      .groupBy(seriesCols.map(col): _*)
+      .agg(map_from_entries(collect_list(struct(col("bucket_ms"), col("value")))).as("m"))
+      .select(seriesCols.map(col) :+ col("m") :+
+        explode(sequence(lit(alignedT0), lit(lastBucket), lit(intervalMs))).as("bucket_ms"): _*)
+      .select(seriesCols.map(col) :+ col("bucket_ms") :+
+        element_at(col("m"), col("bucket_ms")).as("value"): _*)
+      .withColumn("value", filled)
   }
 
   /** Linear interpolation over a null-filled grid (extension beyond the

@@ -116,7 +116,7 @@ object TsdbQueries {
     "tsdb_downsample_fill" -> ((s, dir) => {
       val ev = Tables.events(s, dir).where(col("event_type") === "click")
       val ds = Downsample(ev, Seq("user_id"), Day, "avg")
-      Downsample.withFill(s, ds, Seq("user_id"), Day, T0, T1, "zero")
+      Downsample.withFill(ds, Seq("user_id"), Day, T0, T1, "zero")
         .select("user_id", "bucket_ms", "value")
         .orderBy("user_id", "bucket_ms")
     }),
@@ -126,7 +126,7 @@ object TsdbQueries {
     "tsdb_downsample_fill_linear" -> ((s, dir) => {
       val ev = Tables.events(s, dir).where(col("event_type") === "click")
       val ds = Downsample(ev, Seq("user_id"), Day, "avg")
-      val grid = Downsample.withFill(s, ds, Seq("user_id"), Day, T0, T1, "null")
+      val grid = Downsample.withFill(ds, Seq("user_id"), Day, T0, T1, "null")
       Downsample.fillLinear(grid, Seq("user_id"))
         .select(col("user_id"), col("bucket_ms"),
           graft.core.D.r4s(col("value")).as("value"))
@@ -139,7 +139,7 @@ object TsdbQueries {
     "tsdb_downsample_fill_prev" -> ((s, dir) => {
       val ev = Tables.events(s, dir).where(col("event_type") === "click")
       val ds = Downsample(ev, Seq("user_id"), Day, "avg")
-      val grid = Downsample.withFill(s, ds, Seq("user_id"), Day, T0, T1, "null")
+      val grid = Downsample.withFill(ds, Seq("user_id"), Day, T0, T1, "null")
       Downsample.fillPrevious(grid, Seq("user_id"))
         .select("user_id", "bucket_ms", "value")
         .orderBy("user_id", "bucket_ms")
@@ -1523,7 +1523,7 @@ object TsdbQueries {
     "tsdb_downsample_fill_nan" -> ((s, dir) => {
       val ev = Tables.events(s, dir).where(col("event_type") === "click")
       val ds = Downsample(ev, Seq("user_id"), Day, "avg")
-      Downsample.withFill(s, ds, Seq("user_id"), Day,
+      Downsample.withFill(ds, Seq("user_id"), Day,
         T0 - 2 * Day, T1 + 2 * Day, "nan")
         .select("user_id", "bucket_ms", "value")
         .orderBy("user_id", "bucket_ms")
@@ -1541,7 +1541,7 @@ object TsdbQueries {
     "tsdb_downsample_fill_nan_text" -> ((s, dir) => {
       val ev = Tables.events(s, dir).where(col("event_type") === "click")
       val ds = Downsample(ev, Seq("user_id"), Day, "avg")
-      Downsample.withFill(s, ds, Seq("user_id"), Day,
+      Downsample.withFill(ds, Seq("user_id"), Day,
         T0 - 2 * Day, T1 + 2 * Day, "nan")
         .select(col("user_id"), col("bucket_ms"),
           when(isnan(col("value")), lit("NaN"))

@@ -578,16 +578,24 @@ class BehaviorSpec extends SparkSpec {
     // layout builds it inside its own call, a later row reads the files
     // already there. Run representative rows — both dispatch regimes,
     // iterative peels, the copart wedge path — once right after the
-    // layout is dropped and once over the reused layout, and compare
-    // collected rows exactly.
+    // layout is dropped AND its files deleted (a current layout left on
+    // disk would only be registered) and once over the reused layout,
+    // and compare collected rows exactly.
     val names = Seq("graph_degree_hist", "graph_pagerank",
       "graph_pagerank_copart", "graph_kcore", "graph_adamic_adar",
       "graph_adamic_adar_copart", "graph_components", "graph_triangles")
     val t = Graph.edgeTableName(sf)
+    val loc = new org.apache.hadoop.fs.Path(Graph.edgeTableLocation(spark, sf))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     names.foreach { n =>
+      val before =
+        if (spark.catalog.tableExists(t)) spark.table(t).inputFiles.toSet else Set.empty[String]
       spark.sql(s"DROP TABLE IF EXISTS $t")
+      fs.delete(loc, true)
       val builtRows = run(n).collect().toSeq
       assert(spark.catalog.tableExists(t), s"$n must build the stored layout")
+      assert(spark.table(t).inputFiles.toSet.intersect(before).isEmpty,
+        s"$n must write the layout inside its own call, not reuse old files")
       val reusedRows = run(n).collect().toSeq
       assert(builtRows == reusedRows,
         s"$n diverges between a freshly built and a reused edge layout")
@@ -626,8 +634,31 @@ class BehaviorSpec extends SparkSpec {
         "a rewritten lineitem must rebuild the layout")
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val d = new org.apache.hadoop.fs.Path(dir)
-      d.getFileSystem(conf).delete(d, true)
+      Seq(dir, Graph.edgeTableLocation(spark, dir)).foreach { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        p.getFileSystem(conf).delete(p, true)
+      }
     }
+  }
+
+  test("stored edge layout: a current layout left on disk is registered, not rebuilt") {
+    // what a fresh JVM sees: a catalog without the table, over layout
+    // files whose source signature still matches. The next graph call
+    // must register those files as they are — rebuilding would delete
+    // files another JVM may be scanning — and serve the same rows.
+    val t = Graph.edgeTableName(sf)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def files(): Map[String, Long] = spark.table(t).inputFiles.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      f -> p.getFileSystem(conf).getFileStatus(p).getModificationTime
+    }.toMap
+    def rows() = Graph.edges(spark, sf).as[(Long, Long)].collect().sorted.toSeq
+    val before = rows()
+    val built = files()
+    assert(built.nonEmpty)
+    spark.sql(s"DROP TABLE $t")
+    assert(!spark.catalog.tableExists(t))
+    assert(rows() == before, "the registered layout must serve the same edges")
+    assert(files() == built, "a current layout must be registered, never rebuilt")
   }
 }

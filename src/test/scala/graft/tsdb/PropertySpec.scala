@@ -186,9 +186,9 @@ class PropertySpec extends SparkSpec {
         val ds = Downsample(df, Seq("user"), 3600000L, "sum")
         val t1 = 10L * 3600000
         val users = ds.select("user").distinct().count()
-        val zero = Downsample.withFill(spark, ds, Seq("user"), 3600000L, 0L, t1, "zero")
+        val zero = Downsample.withFill(ds, Seq("user"), 3600000L, 0L, t1, "zero")
         zero.count() == users * 10 &&
-          Downsample.withFill(spark, ds, Seq("user"), 3600000L, 0L, t1, "none")
+          Downsample.withFill(ds, Seq("user"), 3600000L, 0L, t1, "none")
             .count() == ds.count()
       }
     })

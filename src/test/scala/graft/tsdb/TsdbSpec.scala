@@ -187,7 +187,7 @@ class TsdbSpec extends SparkSpec {
     // anchors and must stay null
     val df = pts(("m", 1L, 60000L, 2.0), ("m", 1L, 240000L, 8.0))
     val ds = Downsample(df, Seq("user"), 60000L, "sum")
-    val grid = Downsample.withFill(spark, ds, Seq("user"), 60000L, 0L, 360000L, "null")
+    val grid = Downsample.withFill(ds, Seq("user"), 60000L, 0L, 360000L, "null")
     val out = Downsample.fillLinear(grid, Seq("user"))
       .orderBy("bucket_ms").collect()
     assert(out.length == 6)
@@ -202,24 +202,52 @@ class TsdbSpec extends SparkSpec {
   test("fill policies: zero fills gaps, null keeps them, none drops them") {
     val df = pts(("m", 1L, 0L, 1.0), ("m", 1L, 120000L, 5.0)) // gap at bucket 1
     val ds = Downsample(df, Seq("user"), 60000L, "sum")
-    val zero = Downsample.withFill(spark, ds, Seq("user"), 60000L, 0L, 180000L, "zero")
+    val zero = Downsample.withFill(ds, Seq("user"), 60000L, 0L, 180000L, "zero")
       .orderBy("bucket_ms").collect()
     assert(zero.length == 3)
     assert(zero.map(_.getAs[Double]("value")).toSeq == Seq(1.0, 0.0, 5.0))
-    val nul = Downsample.withFill(spark, ds, Seq("user"), 60000L, 0L, 180000L, "null")
+    val nul = Downsample.withFill(ds, Seq("user"), 60000L, 0L, 180000L, "null")
       .orderBy("bucket_ms").collect()
     assert(nul(1).isNullAt(nul(1).fieldIndex("value")))
-    val nan = Downsample.withFill(spark, ds, Seq("user"), 60000L, 0L, 180000L, "nan")
+    val nan = Downsample.withFill(ds, Seq("user"), 60000L, 0L, 180000L, "nan")
       .orderBy("bucket_ms").collect()
     assert(nan(1).getAs[Double]("value").isNaN)
-    val none = Downsample.withFill(spark, ds, Seq("user"), 60000L, 0L, 180000L, "none")
+    val none = Downsample.withFill(ds, Seq("user"), 60000L, 0L, 180000L, "none")
     assert(none.count() == 2)
+  }
+
+  test("fill keeps the values of a group whose tag value is null") {
+    // not_literal_or admits a series WITHOUT the filtered tag key, so its
+    // group-tag value is null: the fill must key that group like any
+    // other, keep its downsampled values and fill only its real gaps —
+    // on the uncapped path and on the capped one (one tag-keyed exchange
+    // after the downsample)
+    val H = 3600000L
+    val points = Seq(
+      ("m", Map("user" -> "1"), 0L, 1.0),
+      ("m", Map("user" -> "2"), 0L, 2.0), ("m", Map("user" -> "2"), 2 * H, 4.0),
+      ("m", Map("host" -> "a"), H, 5.0), ("m", Map("host" -> "a"), 3 * H, 7.0))
+      .toDF("metric", "tags", "ts_ms", "value")
+    def req(fill: String) = TsdbQuery(0L, 4 * H, Seq(
+      SubQuery("m", "sum", downsample = Some(DownsampleSpec(H, "avg", fill)),
+        filters = Seq(TagFilterSpec("not_literal_or", "user", "1", groupBy = true)))))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("tag_user"), col("bucket_ms"), col("value").cast("double"))
+        .as[(Option[String], Long, Double)].collect().toSet
+    val expect = Set[(Option[String], Long, Double)](
+      (Some("2"), 0L, 2.0), (Some("2"), H, 0.0), (Some("2"), 2 * H, 4.0), (Some("2"), 3 * H, 0.0),
+      (None, 0L, 0.0), (None, H, 5.0), (None, 2 * H, 0.0), (None, 3 * H, 7.0))
+    assert(rows(Pipeline.run(spark, points, req("zero"))) == expect)
+    assert(rows(Pipeline.runCapped(spark, points, req("zero"),
+      Pipeline.Caps(maxDataPoints = 100))) == expect)
+    assert(rows(Pipeline.run(spark, points, req("none"))) ==
+      expect.filter(r => r._3 != 0.0))
   }
 
   test("fill spine covers head and tail gaps") {
     val df = pts(("m", 1L, 60000L, 2.0))
     val ds = Downsample(df, Seq("user"), 60000L, "sum")
-    val filled = Downsample.withFill(spark, ds, Seq("user"), 60000L, 0L, 240000L, "zero")
+    val filled = Downsample.withFill(ds, Seq("user"), 60000L, 0L, 240000L, "zero")
       .orderBy("bucket_ms").collect()
     assert(filled.map(_.getAs[Long]("bucket_ms")).toSeq == Seq(0L, 60000L, 120000L, 180000L))
     assert(filled.map(_.getAs[Double]("value")).toSeq == Seq(0.0, 2.0, 0.0, 0.0))
@@ -230,7 +258,7 @@ class TsdbSpec extends SparkSpec {
     // (tsdb_downsample_fill_nan); this is the semantic micro-pin
     val df = pts(("m", 1L, 60000L, 2.0), ("m", 1L, 180000L, 4.0))
     val ds = Downsample(df, Seq("user"), 60000L, "sum")
-    val filled = Downsample.withFill(spark, ds, Seq("user"), 60000L, 0L, 300000L, "nan")
+    val filled = Downsample.withFill(ds, Seq("user"), 60000L, 0L, 300000L, "nan")
       .orderBy("bucket_ms").collect()
     val vs = filled.map(_.getAs[Double]("value"))
     assert(vs.length == 5)
@@ -257,7 +285,7 @@ class TsdbSpec extends SparkSpec {
     val df = pts(("m", 1L, 0L, 1.0))
     val ds = Downsample(df, Seq("user"), 1000L, "sum")
     intercept[IllegalArgumentException] {
-      Downsample.withFill(spark, ds, Seq("user"), 1000L,
+      Downsample.withFill(ds, Seq("user"), 1000L,
         0L, 365L * 86400000L, "zero", maxBuckets = 10000L)
     }
   }
