@@ -1266,8 +1266,8 @@ object LlmQueries {
     "llm_sim_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val qv = emb.where(col("vec_id") === 0).select(col("embedding").as("qv"))
-      // overlapped subspace training (r18, guide §2.6) — identical
-      // codebooks, the 4 independent Lloyd chains no longer serialize
+      // the 4 subspaces train in one Lloyd loop: one pass per iteration
+      // assigns and folds all of them
       val books = Similarity.pqCodebooksCollected(emb, m = 4, k = 8, iters = 1, dim = 64)
       Similarity.pqTopKCollected(emb, qv, books, 64, 10)
     }),

@@ -216,140 +216,138 @@ object Similarity {
 
   /** IVF coarse quantizer: k-means with DETERMINISTIC seeding (the k
     * vectors with the lowest ids — no RNG, so executors/retries agree)
-    * and a fixed number of Lloyd iterations. Each iteration collects the
-    * k tiny centroid rows to the driver (literals), so assignment is a
-    * zero-shuffle map-side projection and the only shuffle per iteration
-    * is the k×dim-keyed mean aggregate — at corpus scale the per-
-    * iteration cost is one map pass, never a payload re-shuffle. Returns
+    * and a fixed number of Lloyd iterations, trained by
+    * [[trainLockstep]]: each iteration is one pass that assigns every
+    * vector with the [[org.apache.spark.sql.graftfn.NearestCentroid]]
+    * kernel and folds the cluster means with
+    * [[org.apache.spark.sql.graftfn.LloydMean]] (one row per member
+    * vector, exact decimal sums) — the only shuffle per iteration is
+    * that k-group aggregate, never a payload re-shuffle. Returns
     * (centroid_id, cvec ARRAY<FLOAT>).
     *
-    * EAGER: each Lloyd iteration runs Spark jobs at CALL time (the
-    * centroid collect inside assignToCentroids), so this is not a lazy
-    * plan builder — explain/plan-only callers still pay the iterations. */
-  def ivfCentroids(vectors: DataFrame, k: Int, iters: Int = 2): DataFrame = {
-    // seed ids via sort_array(collect_list) over the k seed rows — same
-    // (rank by vec_id − 1) mapping as a row_number window, without an
-    // unpartitioned WindowExec (k rows post-limit, so the single-group
-    // aggregate is config-sized by construction)
-    var centroids = vectors.orderBy("vec_id").limit(k)
-      .agg(expr("sort_array(collect_list(struct(vec_id, embedding)))").as("s"))
-      .select(posexplode(col("s")))
-      .select(col("pos").cast("int").as("centroid_id"),
-        col("col").getField("embedding").as("cvec"))
-    for (_ <- 1 to iters) {
-      // component-wise mean via posexplode → per-(cluster, dim) decimal
-      // avg → reassemble: shuffle-friendly (never collects a cluster's
-      // members into one row) and deterministic under any partitioning.
-      // collectCentroids (inside assignToCentroids) eagerly evaluates
-      // the previous iteration into k literal rows, so each Lloyd step
-      // is a small self-contained job — no ever-deepening plan and no
-      // full-corpus checkpoint.
-      // dispatchK from the REQUESTED k: keeps the assignment route
-      // stable across iterations even when empty-cluster drops shrink
-      // the surviving set below a route ceiling, and skips the literal
-      // tree at build-relevant k (compile-per-iteration dominates —
-      // see LiteralBuildKCeiling)
-      centroids = assignNearest(vectors, collectCentroids(centroids),
-          buildDispatchK(k))
-        .select(col("centroid_id"), posexplode(col("embedding")))
-        .groupBy("centroid_id", "pos")
-        .agg((sum(graft.core.D.dec(col("col").cast("double"))).cast("double")
-          / count(lit(1))).as("mean"))
-        .groupBy("centroid_id")
-        .agg(expr("transform(array_sort(collect_list(struct(pos, mean))), s -> CAST(s.mean AS FLOAT))")
-          .as("cvec"))
-    }
-    centroids
+    * EAGER: the Lloyd iterations run Spark jobs at CALL time, so this is
+    * not a lazy plan builder — explain/plan-only callers still pay them. */
+  def ivfCentroids(vectors: DataFrame, k: Int, iters: Int = 2): DataFrame =
+    centroidFrame(vectors.sparkSession, trainLockstep(vectors, Vector(Book(k, iters))).head)
+
+  private def centroidFrame(s: SparkSession, cs: Centroids): DataFrame = {
+    import s.implicits._
+    cs.toIndexedSeq.map { case (cid, cvec, _) => (cid, cvec) }.toDF("centroid_id", "cvec")
   }
 
-  /** The k centroid rows as driver-side literals (centroid_id, cvec,
+  /** A codebook as the assignment kernels read it: (centroid_id, cvec,
+    * squared norm), sorted by id. */
+  private[llm] type Centroids = Array[(Int, Seq[Float], Double)]
+
+  /** One codebook [[trainLockstep]] fits: `k` centroids over the
+    * embedding region `[off, off + len)` (`len < 0`: the whole array, as
+    * the IVF quantizer; a PQ subspace is a slice), `iters` Lloyd
+    * iterations. */
+  private final case class Book(k: Int, iters: Int, off: Int = 0, len: Int = -1) {
+    def region(v: Seq[Any]): Seq[Any] =
+      if (v == null || len < 0) v else v.slice(off, off + len)
+    def regionCol: Column =
+      if (len < 0) col("embedding") else slice(col("embedding"), off + 1, len)
+  }
+
+  /** Lloyd k-means for every codebook in `books` at once. The seeds are
+    * read once: the lowest-id rows in `sort_array(collect_list(struct(
+    * vec_id, embedding)))` order, centroid_id = rank − 1, each book
+    * taking its first k. Lloyd iteration t is ONE pass over `vectors`:
+    * every vector is assigned under every book still training (iters ≥
+    * t) and all means fold in one [[org.apache.spark.sql.graftfn.LloydMean]]
+    * aggregate keyed by (book, centroid), collected as the next
+    * centroids. A cluster left without members drops out, as a groupBy
+    * drops it. Per book the result equals a separate seed → assign →
+    * mean chain (CentroidsSpec pins it), so training the IVF quantizer
+    * and the m PQ subspaces together changes no byte of output; a book
+    * of requested k ≥ [[TwoLevelKCeiling]] assigns through
+    * [[assignByTwoLevel]] inside the same pass. */
+  private def trainLockstep(vectors: DataFrame, books: IndexedSeq[Book]): IndexedSeq[Centroids] = {
+    import org.apache.spark.sql.graftfn.{LloydMean, NearestCentroid}
+    val seeds = vectors.orderBy("vec_id").limit(books.map(_.k).max)
+      .agg(expr("sort_array(collect_list(struct(vec_id, embedding)))").as("s"))
+      .head().getSeq[org.apache.spark.sql.Row](0)
+    val cur = books.map(b => centroidsOf(
+      seeds.take(b.k).zipWithIndex.map { case (r, i) => (i, b.region(r.getSeq[Any](1))) }))
+      .toArray
+    for (t <- 1 to books.map(_.iters).max) {
+      val active = books.indices.filter(books(_).iters >= t)
+      var frame = vectors
+      val tags = active.map { bi =>
+        val b = books(bi)
+        val cid =
+          if (math.max(cur(bi).length, b.k) < TwoLevelKCeiling)
+            NearestCentroid.of(col("embedding"), cur(bi).toIndexedSeq, b.off, b.len)
+          else {
+            val name = s"cid_$bi"
+            frame = frame.join(
+              assignByTwoLevel(vectors.select(col("vec_id"), b.regionCol.as("embedding")), cur(bi))
+                .select(col("vec_id"), col("centroid_id").as(name)), "vec_id")
+            col(name)
+          }
+        struct(lit(bi).as("book"), cid.as("cid"), lit(b.off).as("off"), lit(b.len).as("len"))
+      }
+      val means = frame.select(col("embedding"), explode(array(tags: _*)).as("a"))
+        .groupBy(col("a.book"), col("a.cid"))
+        .agg(LloydMean.of(col("embedding"), col("a.off"), col("a.len")))
+        .collect().groupBy(_.getInt(0))
+      active.foreach { bi =>
+        cur(bi) = centroidsOf(means.getOrElse(bi, Array.empty).toSeq
+          .filterNot(_.isNullAt(2)).map(r => (r.getInt(1), r.getSeq[Any](2))))
+      }
+    }
+    cur.toIndexedSeq
+  }
+
+  /** Validated [[Centroids]] from (centroid_id, cvec) pairs: the squared
+    * norm is [[org.apache.spark.sql.graftfn.Dot4.dot]], the value the
+    * `dot4` expression gives. A null cvec or element has no distance to
+    * anything, so it stops the build here. */
+  private def centroidsOf(rows: Seq[(Int, Seq[Any])]): Centroids = {
+    require(rows.nonEmpty, "collectCentroids: no centroids (empty input?)")
+    rows.map { case (id, v) =>
+      if (v == null || v.contains(null))
+        throw new IllegalStateException(
+          s"collectCentroids: centroid $id has a null/invalid cvec " +
+            "(null element or length mismatch made Dot4 return NULL)")
+      val f = v.map(_.asInstanceOf[Float]).toArray
+      (id, f.toSeq, org.apache.spark.sql.graftfn.Dot4.dot(f, f))
+    }.toArray.sortBy(_._1)
+  }
+
+  /** The k centroid rows collected to the driver (centroid_id, cvec,
     * squared norm). k is tiny by construction, so this is a config-sized
-    * read, not a data collect; the squared norm comes from the SAME Dot4
-    * expression the join form used, keeping distances bit-identical.
+    * read, not a data collect; the squared norm is the `dot4` value,
+    * keeping distances bit-identical.
     *
     * EAGER: this runs a Spark collect job at call time, so everything
-    * built on it (ivfCentroids, assignToCentroids, ivfTopK) executes
-    * full jobs during DataFrame CONSTRUCTION — plan-dump / schema-only
-    * consumers pay the Lloyd iterations too. Deliberate trade-off: it
-    * keeps assignment a zero-shuffle literal projection.
+    * built on it (assignToCentroids, ivfTopK, pqEncode) executes jobs
+    * during DataFrame CONSTRUCTION.
     *
-    * CEILING (production-k swap): downstream consumers bake these k
-    * rows into a chained `least`-over-structs / CASE expression tree.
-    * That is the right zero-shuffle trade at the fixture's k=8..64, but
-    * the generated code grows O(k·dim): past k≈a few hundred Janino
-    * hits the 64 KB method-bytecode limit and whole-stage codegen falls
-    * back to interpreted (silent ~10× slowdown), and at FAISS-scale k
-    * (4k–64k centroid lists) the driver-side plan itself bloats. The
-    * swap at that scale — same results, no literals: keep centroids a
-    * k-row RELATION, `broadcast()` it into a vectors × centroids join,
-    * and take `min_by(struct(dist, centroid_id))` per vector (one
-    * map-side broadcast-NLJ pass, still zero shuffle of the vectors;
-    * the per-row cost is identical, only the code shape changes). The
-    * same swap applies to [[readPqCodebooks]]' ADC scoring (codebooks
-    * → broadcast relation keyed by (sub, code)). Measured at k=256
-    * (PERF.md r11, "Chained-CASE ceiling MEASURED at k=256"): literal
-    * falls out of whole-stage codegen (Janino 64 KB) at 3.60 s; broadcast+min_by
-    * stays codegen'd at 1.18 s. As of r12 the swap is MECHANIZED:
-    * [[assignNearest]] auto-selects the broadcast form at
-    * k ≥ [[LiteralKCeiling]] — callers never see the difference. */
-  private[llm] def collectCentroids(centroids: DataFrame): Array[(Int, Seq[Float], Double)] = {
-    val rows = centroids
-      .select(col("centroid_id"), col("cvec"), dotExpr("cvec", "cvec").as("sq_c"))
-      .collect()
-    require(rows.nonEmpty, "collectCentroids: no centroids (empty input?)")
-    rows.map { r =>
-      if (r.isNullAt(2))
-        throw new IllegalStateException(
-          s"collectCentroids: centroid ${r.get(0)} has a null/invalid cvec " +
-            "(null element or length mismatch made Dot4 return NULL)")
-      (r.getInt(0), r.getSeq[Float](1), r.getDouble(2))
-    }.sortBy(_._1)
-  }
+    * Downstream, the assignment and the PQ encoding read these rows as
+    * DATA through the [[org.apache.spark.sql.graftfn.NearestCentroid]]
+    * kernel, so their generated code is the same size at any k and
+    * dimension (the former `least`-over-structs literal tree grew
+    * O(k·dim) and, even at k=8, dim=64, drove the lists stage's method
+    * past HotSpot's 8,000-byte JIT limit). The probe-side nprobe pick
+    * ([[probeScored]]) and the ADC score ([[pqScoreCol]]) still bake
+    * the rows into literal expressions — O(k) and O(m·k) per row, fine
+    * at probe-time k, the site to move onto data next at FAISS-scale k. */
+  private[llm] def collectCentroids(centroids: DataFrame): Centroids =
+    centroidsOf(centroids.select(col("centroid_id"), col("cvec")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Any](1))).toSeq)
 
   /** Assign every vector to its nearest centroid — MAP-ONLY: the k
-    * centroids are literal constant arrays, so assignment is a
-    * zero-shuffle codegen'd projection (`least` over (dist, centroid_id)
-    * structs — the same deterministic tie-break the former aggregate
-    * form used, without shuffling embedding payloads through a
-    * full-corpus hash-agg once per Lloyd iteration).
+    * collected centroids ride the nearest-centroid kernel as data, so
+    * assignment is a zero-shuffle codegen'd projection with the
+    * lowest-id tie-break (see [[assignNearest]]).
     *
     * EAGER: collects the centroid frame at call time (see
     * [[collectCentroids]]) — constructing the returned DataFrame runs
     * Spark jobs. */
   def assignToCentroids(vectors: DataFrame, centroids: DataFrame): DataFrame =
     assignNearest(vectors, collectCentroids(centroids))
-
-  /** k at or above which [[assignNearest]] abandons the literal
-    * least-over-structs projection for the broadcast-relation + min_by
-    * form. 128 sits between the largest fixture k (64 — literal is
-    * fastest there: zero shuffle, zero join) and the measured k=256
-    * cliff where the literal expression tree blows Janino's 64 KB
-    * method-bytecode limit, drops out of whole-stage codegen, and runs
-    * interpreted at ~3× the broadcast form's cost (PERF.md r11,
-    * "Chained-CASE ceiling MEASURED at k=256": 3.60 s vs 1.18 s at 1×). */
-  val LiteralKCeiling = 128
-
-  /** k at or above which BUILD-path assignments (the Lloyd loop and the
-    * lists build — [[ivfCentroids]] / buildIvfIndexCarrying) skip the
-    * literal expression tree even though it EXECUTES fastest: every
-    * Lloyd iteration generates a FRESH plan, and a k×dim literal tree
-    * costs ~10 s of Janino compilation per iteration at k=80/dim=64
-    * (measured at the 10× replica, PERF.md r16 §4b: the mean-agg stage read
-    * 14.5 s with literal centroids embedded vs <1 s broadcast
-    * execution) — compile-per-iteration dominates run-once plans.
-    * Serving/probe paths keep the literal route up to
-    * [[LiteralKCeiling]]: they compile once and execute many times.
-    * 32 keeps every oracle-gated build literal (fixture k = 8
-    * everywhere, scaledAnnK resolves to 8 at every driver scale), so
-    * gate-hashed plans AND results are unchanged; the broadcast form
-    * is bit-equal anyway (LlmSpec pins literal ≡ broadcast). */
-  val LiteralBuildKCeiling = 32
-
-  /** Dispatch k for BUILD-path assignment at requested size `k`: below
-    * [[LiteralBuildKCeiling]] stay literal; otherwise skip at least to
-    * the broadcast form (two-level takes over past its own ceiling). */
-  private def buildDispatchK(k: Int): Int =
-    if (k >= LiteralBuildKCeiling) math.max(k, LiteralKCeiling) else k
 
   /** k at or above which [[assignNearest]] routes through the
     * TWO-LEVEL (coarse-then-fine) assignment instead of scoring all k
@@ -364,67 +362,38 @@ object Similarity {
     * take the (standard, documented) approximate-assignment trade. */
   val TwoLevelKCeiling = 512
 
-  /** Nearest-centroid assignment, auto-selecting the code shape by k:
-    * literal expression tree below [[LiteralKCeiling]] (map-only, zero
-    * shuffle — the right trade at index-fixture k), broadcast relation
-    * + min_by from there (codegen-safe at any k), and the two-level
-    * coarse/fine route at or above [[TwoLevelKCeiling]] (the n·√k
-    * build-scale path). Same distance expression and lowest-id
-    * tie-break in all three; the first two are exhaustive-exact, the
-    * third restricts candidates to the vector's coarse cell (exact on
-    * separated clusters, standard IVF-build approximation otherwise). */
-  private[llm] def assignNearest(vectors: DataFrame,
-                            cs: Array[(Int, Seq[Float], Double)],
-                            dispatchK: Int = -1): DataFrame = {
+  /** Nearest-centroid assignment, two arms by k: the
+    * [[org.apache.spark.sql.graftfn.NearestCentroid]] kernel below
+    * [[TwoLevelKCeiling]] (map-only, zero shuffle, exhaustive-exact; the
+    * centroids ride as data, so the generated code does not grow with k)
+    * and the two-level coarse/fine route at or above it (the n·√k
+    * build-scale path, which restricts candidates to the vector's coarse
+    * cell: exact on separated clusters, the standard IVF-build
+    * approximation otherwise). Same distance and lowest-id tie-break in
+    * both. */
+  private[llm] def assignNearest(vectors: DataFrame, cs: Centroids,
+                                 dispatchK: Int = -1): DataFrame = {
     // Route by the REQUESTED build k when the caller supplies it, not
     // the surviving-centroid count (r16): Lloyd drops empty clusters,
     // so a k=800 build can dip to ~500 survivors after one update and
-    // fall off the two-level route onto the exhaustive broadcast pass
-    // — measured 10× (iter2 49 s vs iter1's 5 s assignment at the 100×
-    // replica). The training regime is a property of the build
-    // geometry, not of the survivor count; and since no oracle-gated
-    // path ever REQUESTS k ≥ TwoLevelKCeiling (see the ceiling's
-    // scaladoc), routing by requested k is bit-identical for every
-    // gate-hashed build.
+    // fall off the two-level route onto the exhaustive pass — measured
+    // 10× (iter2 49 s vs iter1's 5 s assignment at the 100× replica).
+    // The training regime is a property of the build geometry, not of
+    // the survivor count; and since no oracle-gated path ever REQUESTS
+    // k ≥ TwoLevelKCeiling (see the ceiling's scaladoc), routing by
+    // requested k is bit-identical for every gate-hashed build.
     val k = math.max(cs.length, dispatchK)
-    if (k < LiteralKCeiling || !vectors.columns.contains("vec_id"))
-      assignByLiterals(vectors, cs)
-    else if (k < TwoLevelKCeiling) assignByBroadcast(vectors, cs)
+    if (k < TwoLevelKCeiling || !vectors.columns.contains("vec_id"))
+      assignByKernel(vectors, cs)
     else assignByTwoLevel(vectors, cs)
   }
 
-  /** Production-k assignment: centroids stay a k-row RELATION,
-    * broadcast into a vectors × centroids nested-loop pass, per-vector
-    * argmin via `min(struct(dist, centroid_id))` (lexicographic struct
-    * order = the literal form's lowest-id tie-break), then a join back
-    * on vec_id to restore the caller's schema. Generated code is O(1)
-    * in k — the centroid data rides the broadcast, not the instruction
-    * stream. Distances use the IDENTICAL expression the literal form
-    * codegens (sq_a + sq_c − 2·Dot4), so assignments are bit-equal.
-    * Costs vs literal: the argmin shuffles corpus-count (vec_id, dist)
-    * pairs (map-side partial min first) and the restore join shuffles
-    * the corpus once — both dwarfed by the k·dim flops/row that
-    * dominate at the k where this path activates; serving deployments
-    * precompute assignment into the stored index anyway
-    * (ensureIvfIndex). Falls back to literal when `vectors` lacks a
-    * vec_id key to join back on. */
-  private[llm] def assignByBroadcast(vectors: DataFrame,
-                                cs: Array[(Int, Seq[Float], Double)]): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val cdf = cs.toIndexedSeq.toDF("centroid_id", "cvec", "sq_c")
-    val nearest = vectors
-      .select(col("vec_id"), col("embedding"),
-        dotExpr("embedding", "embedding").as("sq_a"))
-      .crossJoin(broadcast(cdf))
-      .select(col("vec_id"), struct(
-        (col("sq_a") + col("sq_c")
-          - lit(2.0) * dotExpr("embedding", "cvec")).as("dist"),
-        col("centroid_id")).as("dc"))
-      .groupBy("vec_id")
-      .agg(min(col("dc")).getField("centroid_id").as("centroid_id"))
-    vectors.join(nearest, Seq("vec_id"))
-  }
+  /** Exhaustive assignment: `vectors` plus `centroid_id` from the
+    * [[org.apache.spark.sql.graftfn.NearestCentroid]] kernel over the
+    * whole embedding. */
+  private[llm] def assignByKernel(vectors: DataFrame, cs: Centroids): DataFrame =
+    vectors.withColumn("centroid_id",
+      org.apache.spark.sql.graftfn.NearestCentroid.of(col("embedding"), cs.toIndexedSeq))
 
   /** Driver-side Lloyd over the k CENTROID rows themselves (k is tiny
     * relative to the corpus — this is k·√k·dim flops of plain Scala):
@@ -480,14 +449,13 @@ object Similarity {
     * vector to its nearest of ⌈√k⌉ super-centroids (one broadcast
     * pass), then score ONLY the centroids living in that coarse cell
     * (a broadcast join on super_id) — ~n·2√k flops instead of n·k.
-    * The fine-level distance is the IDENTICAL expression the exact
-    * forms codegen (sq_a + sq_c − 2·Dot4) with the same lowest-id
-    * tie-break, so wherever the candidate restriction is immaterial
-    * (separated clusters — pinned in LlmSpec) the assignment is
-    * bit-equal to exhaustive; in general it is the standard IVF-build
-    * approximation (FAISS's coarse-quantized add path). Shuffle
-    * profile: two n-row partial-agg min passes + the vec_id restore
-    * join — same order as [[assignByBroadcast]]. */
+    * The fine-level distance is the one the kernel computes
+    * (sq_a + sq_c − 2·Dot4) with the same lowest-id tie-break, so
+    * wherever the candidate restriction is immaterial (separated
+    * clusters — pinned in LlmSpec) the assignment is bit-equal to
+    * exhaustive; in general it is the standard IVF-build approximation
+    * (FAISS's coarse-quantized add path). Shuffle profile: two n-row
+    * partial-agg min passes + the vec_id restore join. */
   private[llm] def assignByTwoLevel(vectors: DataFrame,
                                 cs: Array[(Int, Seq[Float], Double)]): DataFrame = {
     val spark = vectors.sparkSession
@@ -517,30 +485,12 @@ object Similarity {
     vectors.join(fine, Seq("vec_id"))
   }
 
-  private[llm] def assignByLiterals(vectors: DataFrame,
-                               cs: Array[(Int, Seq[Float], Double)]): DataFrame = {
-    require(cs.nonEmpty, "assignByLiterals: no centroids")
-    val dists = cs.map { case (cid, cvec, sqc) =>
-      struct(
-        (col("sq_a") + lit(sqc) - lit(2.0)
-          * org.apache.spark.sql.graftfn.Dot4.of(col("embedding"), typedLit(cvec))).as("dist"),
-        lit(cid).as("centroid_id"))
-    }
-    // least() needs >=2 args; with one centroid (k=1, or Lloyd dropping
-    // empty clusters down to a single survivor) every row belongs to it
-    val nearest = if (dists.length == 1) dists.head
-                  else least(dists.toIndexedSeq: _*)
-    vectors.withColumn("sq_a", dotExpr("embedding", "embedding"))
-      .withColumn("centroid_id", nearest.getField("centroid_id"))
-      .drop("sq_a")
-  }
-
   /** IVF ANN top-k: search only the `nprobe` clusters nearest the query.
     * At scale the assignment column is precomputed/partitioned, so a
     * query touches nprobe/k of the corpus. The centroid plan (the whole
     * Lloyd loop) is evaluated exactly ONCE — both the corpus-side
-    * assignment and the query-side probe selection run off the collected
-    * k-row literals. */
+    * assignment and the query-side probe selection run off the k
+    * collected rows. */
   def ivfTopK(vectors: DataFrame, queryVec: DataFrame, centroids: DataFrame,
               k: Int, nprobe: Int): DataFrame = {
     val cs = collectCentroids(centroids)
@@ -570,92 +520,50 @@ object Similarity {
     * contiguous subspaces and each gets its own deterministic k-means
     * codebook over the SLICED vectors (same seeding/Lloyd machinery as
     * [[ivfCentroids]] — lowest-id seeds, fixed iterations, decimal
-    * means, float32 re-quantization). Returns one centroid frame per
-    * subspace. EAGER, like everything in the IVF family.
+    * means, float32 re-quantization; all m trained in lockstep by
+    * [[trainLockstep]]). Returns one centroid frame per subspace. EAGER,
+    * like everything in the IVF family.
     *
     * Why PQ at all: a 100 TB float32 corpus cannot stay resident for
     * ANN serving; m byte-sized codes per vector (here 4) shrink it
     * ~64× while scoring stays a table lookup per subspace. */
   def pqCodebooks(vectors: DataFrame, m: Int, k: Int,
-                  iters: Int, dim: Int): Seq[DataFrame] = {
-    require(dim % m == 0, s"dim=$dim must split evenly into m=$m subspaces")
-    val len = dim / m
-    (0 until m).map { s =>
-      val sliced = vectors.select(col("vec_id"),
-        expr(s"slice(embedding, ${s * len + 1}, $len)").as("embedding"))
-      ivfCentroids(sliced, k, iters)
-    }
-  }
+                  iters: Int, dim: Int): Seq[DataFrame] =
+    pqCodebooksCollected(vectors, m, k, iters, dim)
+      .map(centroidFrame(vectors.sparkSession, _))
 
-  /** [[pqCodebooks]] with the `m` independent subspace trainings
-    * OVERLAPPED on a bounded pool and eagerly collected (r18, guide
-    * §2.6 "overlap independent jobs"): each subspace's Lloyd rounds are
-    * tiny sample-sized jobs (the quantizer trains on the stride sample
-    * at scale) whose wall-clock is scheduler fixed cost, not compute —
-    * measured 4×~0.9 s sequential at sf0.1 inside buildIvfIndex. The
-    * chains share no state and the per-subspace result is
-    * deterministic (fixed seeds, decimal means), so overlap cannot
-    * change a byte of output; FIFO scheduling back-fills the tail of
-    * one subspace's stage with the next one's tasks. Unlike the copart
-    * wedge slices (whose overlap was measured into a GC spiral and
-    * shipped opt-in), the in-flight state here is k·(dim/m) floats per
-    * chain — config-sized — so a bounded pool is safe on one JVM.
-    * Failure path mirrors Graph's slice pool: cancel outstanding work,
-    * shutdownNow, await, rethrow. */
+  /** [[pqCodebooks]] as collected codebooks. The m subspaces train in
+    * ONE Lloyd loop: each iteration is a single pass that assigns and
+    * folds every subspace at once, so the scheduler's fixed cost per
+    * job is paid once per iteration instead of m times. */
   def pqCodebooksCollected(vectors: DataFrame, m: Int, k: Int, iters: Int,
-                           dim: Int): Seq[Array[(Int, Seq[Float], Double)]] = {
+                           dim: Int): Seq[Array[(Int, Seq[Float], Double)]] =
+    trainLockstep(vectors, pqBooks(m, k, iters, dim))
+
+  /** The m subspace [[Book]]s of a PQ codebook set: slice s covers
+    * `[s·dim/m, (s+1)·dim/m)`. */
+  private def pqBooks(m: Int, k: Int, iters: Int, dim: Int): IndexedSeq[Book] = {
     require(dim % m == 0, s"dim=$dim must split evenly into m=$m subspaces")
     val len = dim / m
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(m, 4))
-    val futs = (0 until m).map { sub =>
-      pool.submit(new java.util.concurrent.Callable[Array[(Int, Seq[Float], Double)]] {
-        def call(): Array[(Int, Seq[Float], Double)] = {
-          val sliced = vectors.select(col("vec_id"),
-            expr(s"slice(embedding, ${sub * len + 1}, $len)").as("embedding"))
-          collectCentroids(ivfCentroids(sliced, k, iters))
-        }
-      })
-    }
-    try {
-      val rs = futs.map(_.get())
-      pool.shutdown()
-      rs
-    } catch {
-      case e: Throwable =>
-        futs.foreach(_.cancel(true))
-        pool.shutdownNow()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        throw e
-    }
+    (0 until m).map(s => Book(k, iters, s * len, len))
   }
 
   /** The `m` PQ code columns (code_0..code_{m-1}) over an `embedding`
-    * column — each the same least-over-(dist, cid) argmin the IVF
-    * assignment uses, per subspace slice, against driver-literal
-    * codebooks. Shared by [[pqEncode]] and the index builder. */
-  private def pqCodeCols(perSub: Seq[Array[(Int, Seq[Float], Double)]],
-                         dim: Int): Seq[Column] = {
-    val m = perSub.size
-    val len = dim / m
+    * column — each the same nearest-centroid kernel the IVF assignment
+    * uses, over its subspace slice. Shared by [[pqEncode]] and the index
+    * builder. */
+  private def pqCodeCols(perSub: Seq[Centroids], dim: Int): Seq[Column] = {
+    val len = dim / perSub.size
     perSub.zipWithIndex.map { case (cs, s) =>
-      val sub = s"slice(embedding, ${s * len + 1}, $len)"
-      val sqSub = org.apache.spark.sql.graftfn.Dot4.of(expr(sub), expr(sub))
-      val dists = cs.map { case (cid, cvec, sqc) =>
-        struct(
-          (sqSub + lit(sqc) - lit(2.0)
-            * org.apache.spark.sql.graftfn.Dot4.of(expr(sub), typedLit(cvec))).as("dist"),
-          lit(cid).as("cid"))
-      }
-      val nearest = if (dists.length == 1) dists.head
-                    else least(dists.toIndexedSeq: _*)
-      nearest.getField("cid").as(s"code_$s")
+      org.apache.spark.sql.graftfn.NearestCentroid
+        .of(col("embedding"), cs.toIndexedSeq, s * len, len).as(s"code_$s")
     }
   }
 
   /** Encode every vector as `m` codebook ids — ONE map-only projection
-    * (the codebooks are driver-collected literals; each code is the
-    * same least-over-(dist, cid) argmin the IVF assignment uses, per
-    * subspace slice). Emits vec_id + code_0..code_{m-1}. */
+    * (the codebooks are driver-collected; each code is the same
+    * nearest-centroid kernel the IVF assignment uses, per subspace
+    * slice). Emits vec_id + code_0..code_{m-1}. */
   def pqEncode(vectors: DataFrame, codebooks: Seq[DataFrame], dim: Int): DataFrame =
     vectors.select(col("vec_id") +: pqCodeCols(codebooks.map(collectCentroids), dim): _*)
 
@@ -871,10 +779,11 @@ object Similarity {
       if (p.trainStride > 1)
         vectors.where(pmod(col("vec_id"), lit(p.trainStride.toLong)) === 0L)
       else vectors
-    val cs = collectCentroids(ivfCentroids(trainVecs, p.k, p.iters))
-    // overlapped subspace training (r18) — bit-identical codebooks,
-    // scheduler fixed cost paid once instead of m times
-    val perSub = pqCodebooksCollected(trainVecs, p.pqM, p.pqK, p.pqIters, p.dim)
+    // the IVF quantizer and the PQ subspaces train in one Lloyd loop
+    val trained = trainLockstep(trainVecs,
+      Book(p.k, p.iters) +: pqBooks(p.pqM, p.pqK, p.pqIters, p.dim))
+    val cs = trained.head
+    val perSub = trained.tail
     // CLUSTER the lists on centroid_id before the dynamic-partition
     // write (r15, measured at the 100× replica): without it every write
     // task opens a file in up to k directories — k × tasks parquet
@@ -883,7 +792,7 @@ object Similarity {
     // one task (≤ min(k, shuffle.partitions)·~1 files, 4 s measured
     // from identical input). PERSISTED so the assignment pass runs once
     // (the write and the _trained marker both consume it).
-    val lists = assignNearest(vectors, cs, buildDispatchK(p.k))
+    val lists = assignNearest(vectors, cs, p.k)
       .withColumn("nrm", normExpr("embedding"))
       .select(vectors.columns.toIndexedSeq.map(col) ++ Seq(col("nrm"), col("centroid_id"))
         ++ pqCodeCols(perSub, p.dim): _*)
@@ -920,8 +829,8 @@ object Similarity {
     } finally { lists.unpersist(); () }
   }
 
-  /** The stored quantizer's centroids as driver literals (one k-row
-    * read), after Keysets finishes any interrupted swap of the index. */
+  /** The stored quantizer's centroids collected to the driver (one
+    * k-row read), after Keysets finishes any interrupted swap of the index. */
   private def storedCentroids(s: SparkSession,
                               path: String): Array[(Int, Seq[Float], Double)] =
     collectCentroids(graft.tsdb.Keysets.readTable(s, path, "centroids"))
@@ -1250,8 +1159,8 @@ object Similarity {
 
   /** Semantic dedup-against-index — the embedding analog of
     * [[graft.llm.Dedup.incrementalNearDups]]: a NEW batch is assigned
-    * to the STORED quantizer's centroids map-side (k driver literals,
-    * zero training) and cosine-verified only against its own cluster's
+    * to the STORED quantizer's centroids map-side (the k collected
+    * centroids, zero training) and cosine-verified only against its own cluster's
     * stored vectors — partition-pruned lists read, precomputed stored
     * norms. Cost: O(batch) assignment + Σ_c (batch_c × cluster_c)
     * verified cosines; the stored index never shuffles (the batch side
@@ -1289,9 +1198,10 @@ object Similarity {
     pqAdcTopK(encoded, queryVec, perSub, dim, topK)
   }
 
-  /** The stored PQ codebooks as driver literals — one m×k-row collect.
-    * Same production-k ceiling and broadcast-relation swap as
-    * [[collectCentroids]] (the ADC chained-CASE grows O(m·k)). */
+  /** The stored PQ codebooks collected to the driver — one m×k-row
+    * collect. The encoding reads them through the nearest-centroid
+    * kernel; the ADC chained-CASE ([[pqScoreCol]]) still bakes them in
+    * as literals and grows O(m·k) (see [[collectCentroids]]). */
   private def readPqCodebooks(s: SparkSession,
                               path: String): Seq[Array[(Int, Seq[Float], Double)]] = {
     val rows = graft.tsdb.Keysets.readTable(s, path, "codebooks")

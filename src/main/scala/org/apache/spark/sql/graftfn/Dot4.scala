@@ -65,8 +65,7 @@ case class Dot4(left: Expression, right: Expression)
       // propagation as the HOF/decimal-oracle formulation (reading the
       // slot as 0.0 would silently diverge from them)
       if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val p = x.getFloat(i).toDouble * y.getFloat(i).toDouble * 10000.0
-      acc += (if (p >= 0) math.floor(p + 0.5) else math.ceil(p - 0.5)).toLong
+      acc += Dot4.term(x.getFloat(i), y.getFloat(i))
       i += 1
     }
     acc / 10000.0
@@ -98,6 +97,22 @@ case class Dot4(left: Expression, right: Expression)
 }
 
 object Dot4 {
+  /** One product rounded half away from zero at the 4th decimal, as the
+    * scaled long the accumulator adds (the generated code inlines the
+    * same steps). */
+  @inline def term(a: Float, b: Float): Long = {
+    val p = a.toDouble * b.toDouble * 10000.0
+    (if (p >= 0) math.floor(p + 0.5) else math.ceil(p - 0.5)).toLong
+  }
+
+  /** `dot4` of two equal-length null-free float arrays. */
+  def dot(x: Array[Float], y: Array[Float]): Double = {
+    var acc = 0L
+    var i = 0
+    while (i < x.length) { acc += term(x(i), y(i)); i += 1 }
+    acc / 10000.0
+  }
+
   /** Column-level entry point (uses the public classic converter). */
   def of(a: Column, b: Column): Column =
     ExpressionUtils.column(Dot4(

@@ -190,19 +190,23 @@ class PlanSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, sf)
     val path = java.nio.file.Files
       .createTempDirectory("graft_planspec_idx").resolve("ann").toString
-    llm.Similarity.buildIvfIndex(spark, emb, path, "planspec")
+    // the build's own job floor: one seed read, one lockstep Lloyd pass
+    // per iteration for the IVF quantizer and every PQ subspace at once,
+    // then the lists, the artifact writes and the trained count
+    val buildJobs = jobCount(llm.Similarity.buildIvfIndex(spark, emb, path, "planspec"))
+    assert(buildJobs == 12, s"buildIvfIndex ran $buildJobs jobs")
     val qs = emb.where(org.apache.spark.sql.functions.col("vec_id") < 4)
       .select(org.apache.spark.sql.functions.col("vec_id").as("query_id"),
         org.apache.spark.sql.functions.col("embedding").as("qv"))
     val probe = llm.Similarity.ivfTopKStored(spark, qs, path, 5, nprobe = 2)
     val p = probe.queryExecution.executedPlan.toString
-    // Lloyd iterations are posexplode + per-(cid,pos) mean
-    // HashAggregates; the probe plan must contain NEITHER — it is a
-    // lists-scan + probe join + per-query top-k window, nothing else
-    // (the one Generate allowed is the probe side's own nprobe explode
-    // over driver-literal centroids)
-    assert(!p.contains("HashAggregate") && !p.contains("posexplode"),
-      s"stored probe must not retrain the quantizer:\n$p")
+    // a Lloyd iteration is a lloyd_mean aggregate (the retired form was
+    // posexplode + per-(cid,pos) mean HashAggregates); the probe plan
+    // must contain NONE of them — it is a lists-scan + probe join +
+    // per-query top-k window, nothing else (the one Generate allowed is
+    // the probe side's own nprobe explode over driver-literal centroids)
+    assert(!p.contains("HashAggregate") && !p.contains("posexplode") &&
+      !p.contains("lloyd_mean"), s"stored probe must not retrain the quantizer:\n$p")
     assert(p.contains("FileScan"), s"probe must scan the stored lists:\n$p")
     // the inverted-list layout pays off: the candidate fetch prunes to
     // the probed centroid_id partitions via dynamic partition pruning

@@ -1386,13 +1386,10 @@ class LlmSpec extends SparkSpec {
     }
   }
 
-  test("assignNearest: broadcast form at k>=128 is bit-equal to literal and codegen-safe") {
-    // 140 centroids (>= Similarity.LiteralKCeiling) puts assignToCentroids
-    // on the broadcast-relation + min_by path; the literal form forced on
-    // the SAME centroid set must produce identical assignments (same
-    // distance expression, same lowest-id tie-break), and the plans must
-    // have the pinned shapes: broadcast carries a BroadcastNestedLoopJoin,
-    // literal stays join-free.
+  test("assignNearest: at k=140 the kernel stays join-free and equals the reference") {
+    // 140 centroids, the range the deleted broadcast arm served: the
+    // kernel keeps assignment a join-free projection there and assigns
+    // exactly as the least-over-(dist, id) literal reference form
     val emb = graft.core.Tables.embeddings(spark, sf)
     val cdf = emb.where(col("vec_id") < 140)
       .select(col("vec_id").cast("int").as("centroid_id"),
@@ -1400,17 +1397,16 @@ class LlmSpec extends SparkSpec {
     val cs = Similarity.collectCentroids(cdf)
     assert(cs.length == 140)
     val viaApi = Similarity.assignToCentroids(emb, cdf)
-    val pBroadcast = viaApi.queryExecution.executedPlan.toString
-    assert(pBroadcast.contains("BroadcastNestedLoopJoin"),
-      s"k=140 must take the broadcast relation path:\n$pBroadcast")
-    val viaLiteral = Similarity.assignByLiterals(emb, cs)
-    assert(!viaLiteral.queryExecution.executedPlan.toString
-      .contains("Join"), "literal form must stay join-free")
+    val p = viaApi.queryExecution.executedPlan.toString
+    assert(!p.contains("Join") && p.contains("nearest_centroid"),
+      s"k=140 must stay a join-free kernel projection:\n$p")
+    val ref = emb.withColumn("centroid_id",
+      graft.CentroidsSpec.nearestRef(col("embedding"), cs.toIndexedSeq))
     val a = viaApi.select("vec_id", "centroid_id").as[(Long, Int)]
       .collect().sortBy(_._1).toSeq
-    val b = viaLiteral.select("vec_id", "centroid_id").as[(Long, Int)]
+    val b = ref.select("vec_id", "centroid_id").as[(Long, Int)]
       .collect().sortBy(_._1).toSeq
-    assert(a == b, "broadcast and literal assignments must be identical")
+    assert(a == b, "kernel and reference assignments must be identical")
     // every vector below 140 is its own centroid (self-distance 0 wins)
     assert(a.takeWhile(_._1 < 140).forall { case (v, c) => v == c })
   }
@@ -1429,7 +1425,7 @@ class LlmSpec extends SparkSpec {
     }.toArray
     val vecs = (0 until 2048).map(i => (i.toLong, coords(i % k)))
       .toDF("vec_id", "embedding")
-    val exact = Similarity.assignByBroadcast(vecs, cs)
+    val exact = Similarity.assignByKernel(vecs, cs)
       .select("vec_id", "centroid_id").as[(Long, Int)].collect().sorted.toSeq
     val two = Similarity.assignByTwoLevel(vecs, cs)
       .select("vec_id", "centroid_id").as[(Long, Int)].collect().sorted.toSeq
